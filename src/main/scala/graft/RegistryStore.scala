@@ -523,10 +523,7 @@ object RegistryStore {
         classesF.transform(scala.util.Success(_)), FoldTimeout)
       ((classesTry: scala.util.Try[Any]) +: bandTries).foreach(_.get)
       bandTries.map(_.get).toMap
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-    }
+    } finally drain(pool, root)
     var attempt = 1
     var committed = false
     while (!committed) {
@@ -607,6 +604,18 @@ object RegistryStore {
     }
   }
 
+  /** Shuts a fold pool down and waits for its writes. A write still
+    * running after 60 s (the [[FoldTimeout]] path) is not cancelled:
+    * it is logged with the store root, because it can race a later
+    * compact's reapStaleGens. */
+  private def drain(pool: java.util.concurrent.ExecutorService,
+      root: String): Unit = {
+    pool.shutdown()
+    if (!pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS))
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"RegistryStore $root: folds still running 60 s after shutdown")
+  }
+
   /** Stage one generation's data files — the classes parquet plus the
     * band index, ranged on (band, k0) so each written file covers a
     * contiguous k0 slice of its band partition (the layout the
@@ -666,10 +675,7 @@ object RegistryStore {
               Seq(cF, bF).map(_.transform(scala.util.Success(_)))),
             FoldTimeout)
           settled.foreach(_.get)
-        } finally {
-          pool.shutdown()
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-        }
+        } finally drain(pool, root)
       } finally bt.unpersist()
     } finally staged.unpersist()
   }

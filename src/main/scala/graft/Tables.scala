@@ -1,19 +1,73 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table readers over a driver testdata directory
   * (`/root/testdata/sf*`, see TESTDATA.md).
   *
-  * All readers are plain `spark.read.parquet` scans so Catalyst keeps
-  * full pushdown / pruning freedom; callers `select` only what they
-  * need and the scan's ReadSchema shrinks accordingly. At cluster
-  * scale the same call works on a directory of many files — nothing
-  * here assumes a single-file layout.
+  * All readers are `spark.read.parquet` scans so Catalyst keeps full
+  * pushdown / pruning freedom; callers `select` only what they need
+  * and the scan's ReadSchema shrinks accordingly. At cluster scale the
+  * same call works on a directory of many files — nothing here
+  * assumes a single-file layout.
+  *
+  * A bare `spark.read.parquet` starts a Spark job to infer the schema
+  * from the footers on every call. [[table]] instead passes the schema
+  * it inferred for the same table before (`spark.read.schema(s)`), so
+  * only the first read of an unchanged table pays that job. The memo
+  * is JVM-wide, one entry per (qualified path, the session's
+  * explicitly set `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*`
+  * confs), and an entry is used only while the recursive leaf listing
+  * under the path — every file's name, length and mtime — is the one
+  * it was inferred from. That makes a hit return what inference would:
+  * the schema is a function of the footers (the files) and of the
+  * parquet confs that shape the mapping (`nanosAsLong`,
+  * `binaryAsString`, `inferTimestampNTZ`, ...). A table rewritten at
+  * the same path gets new part-file names, so it infers again; so does
+  * a session with other parquet settings. The listing is taken before
+  * the inference, so a table rewritten during it is stored under a
+  * listing that no later read sees.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private final case class Inferred(leaves: Seq[(String, Long, Long)],
+      schema: StructType)
+
+  private val schemas =
+    new ConcurrentHashMap[(String, Map[String, String]), Inferred]()
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val p = s"$sfDir/$name.parquet"
+    val path = new Path(p)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = (fs.makeQualified(path).toString,
+      spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.") })
+    val leaves = try {
+      val it = fs.listFiles(path, true)
+      val b = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      b.result().sorted
+    } catch {
+      // a missing table fails with Spark's own error, as before
+      case _: java.io.FileNotFoundException => return spark.read.parquet(p)
+    }
+    Option(schemas.get(key)).filter(_.leaves == leaves) match {
+      case Some(hit) => spark.read.schema(hit.schema).parquet(p)
+      case None =>
+        // infer outside any map lock: the inference is a Spark job
+        val df = spark.read.parquet(p)
+        schemas.put(key, Inferred(leaves, df.schema))
+        df
+    }
+  }
 
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark's vectorized
     * reader rejects. With `spark.sql.legacy.parquet.nanosAsLong=true`

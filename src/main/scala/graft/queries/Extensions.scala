@@ -4634,8 +4634,11 @@ object Extensions {
         .filter(hex32(md5(concat_ws(":", col("rep_a"), col("rep_b"))))
           % CalSampleMod === 0)
         .persist()
-      val candIds = cand.select(col("rep_a").as("rep"))
-        .union(cand.select(col("rep_b").as("rep"))).distinct().persist()
+      // one scan of cand's unfilled cache: a union of two would race
+      // its legs over that cache and recompute the candidate join
+      val candIds = cand
+        .select(explode(array(col("rep_a"), col("rep_b"))).as("rep"))
+        .distinct().persist()
       // MEASURED broadcast (the x86 IngestBcastClassCap discipline —
       // this was the tree's last unconditional hint): candidate reps
       // are class-level and 1-in-4 sampled, but on a near-dup-dense
