@@ -160,8 +160,9 @@ object AnnStore {
     cents.count()
     // assignment deliberately unpersisted: a stateless per-row native
     // encode over the (caller-persisted) input, cheaper to recompute
-    // than to cache (round-15 A/B, tools/LifecycleAbProbe — caching
-    // the wide assignment output measured slower than re-encoding)
+    // than to cache (round-15 A/B, OPTIMIZATION_r15.md §5;
+    // LifecycleAbProbe in cdc5c1f, since deleted — caching the wide
+    // assignment output measured slower than re-encoding)
     val assigned = E.ivfPqAssign(v, cents)
     val rcb = E.ivfPqCodebook(assigned).persist()
     rcb.count()

@@ -1,28 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** EVERY estimator / cap / winnow scale knob of the engine, in one
   * place, each with its exactness contract.
   *
-  * Resolution contract (what the `spark.graft.*` keys mean): the
-  * ENGINE binds the pinned default CONSTANTS below — the oracle-gated
-  * queries must stay conf-independent (a conf-dependent gate could
-  * silently diverge from its replayed oracle), and the library
-  * functions take the knob as an explicit parameter for the same
-  * reason. The conf keys are honored through the per-knob RESOLVERS
-  * ([[spanWinnow]], [[gopherDupWinnow]], [[fpBandCap]],
-  * [[ingestBcastClassCap]]): caller code reads the session value
-  * with one call and passes it into the explicit parameter. Setting
-  * a key changes nothing unless the caller routes it — KnobsSpec
-  * pins both the defaults and the resolver path.
+  * Resolution contract: the engine binds the pinned default
+  * CONSTANTS below. The oracle-gated queries must stay
+  * conf-independent (a conf-dependent gate could silently diverge
+  * from its replayed oracle), so no knob here has a `spark.graft.*`
+  * key. The two winnows are explicit library parameters: a caller
+  * wanting another setting passes it there. The two caps are fixed
+  * constants. The one settable key, the range-join bin size, changes
+  * a plan, never a result. KnobsSpec pins the defaults.
   *
-  * | knob | key | default | contract |
+  * | knob | where it binds | default | contract |
   * |---|---|---|---|
-  * | Gopher dup-gram winnow | `spark.graft.gopher.dupWinnow` | 1 (exact) | mod-k gram-identity sample of the duplicate-n-gram coverage; k>1 makes rep_5..rep_10 deterministic LOWER bounds (monotone: kept starts ⊆ all starts). Public default is EXACT; the x96 gate runs the documented k=4 estimator ([[GopherDupWinnowGate]]) with its oracle replaying the same winnow |
-  * | Span-dedup winnow | `spark.graft.span.winnow` | 1 (exact) | mod-k span-hash sample of the (doc, span) table; counts over kept spans are exact, coverage is a 1/k-identity sample (x45 gate = exact form) |
-  * | Fingerprint band cap | `spark.graft.fingerprint.bandCap` | 64 | two-stage bucket cap on perceptual-hash band joins (x90/x91/x93): buckets above the cap sub-split by the next band — LOSSLESS for Hamming ≤ threshold matches (pigeonhole over the sub-bands), bounds the per-bucket pair fan-out |
-  * | Ingest broadcast class cap | `spark.graft.ingest.bcastClassCap` | 100000 | x86 incremental-ingest: registry classes ≤ cap broadcast (measured, not hinted); above it the probe falls back to a shuffle equi-join — pure execution-strategy switch, result identical |
+  * | Gopher dup-gram winnow | `dupWinnow` parameter of `gopherRepetition` | 1 (exact) | mod-k gram-identity sample of the duplicate-n-gram coverage; k>1 makes rep_5..rep_10 deterministic LOWER bounds (monotone: kept starts ⊆ all starts). Public default is EXACT; the x96 gate runs the documented k=4 estimator ([[GopherDupWinnowGate]]) with its oracle replaying the same winnow |
+  * | Span-dedup winnow | `winnow` parameter of `spanDedupCounts` | 1 (exact) | mod-k span-hash sample of the (doc, span) table; counts over kept spans are exact, coverage is a 1/k-identity sample (x45 gate = exact form) |
+  * | Fingerprint band cap | (constant [[FpBandCapDefault]]) | 64 | two-stage bucket cap on perceptual-hash band joins (x90/x91/x93): buckets above the cap sub-split by the next band — LOSSLESS for Hamming ≤ threshold matches (pigeonhole over the sub-bands), bounds the per-bucket pair fan-out |
+  * | Ingest broadcast class cap | (constant [[IngestBcastClassCapDefault]]) | 100000 | x86 incremental-ingest: registry classes ≤ cap broadcast (measured, not hinted); above it the probe falls back to a shuffle equi-join — pure execution-strategy switch, result identical |
   * | IVF-PQ re-rank depth R | (constant [[queries.Extensions.IvfPqRerankFixed]]) | 8·k | ADC short-list depth re-ranked exactly; recall floor proven by the x98 gate + X80IvfPqSpec on clustered data. `corpusScaledR = true` is the FIXTURE-ONLY escape hatch for isotropic-noise corpora (x80/x66/x83 gates), never the production default |
   * | Range-join bin size | `spark.graft.rangeJoin.binSize` | off | opt-in Catalyst rewrite of inequality range joins into bucketed equi-joins ([[plans.RangeJoinRule]]); result-identical, plan-level only |
   * | Streaming state partitions | (derived, [[streamStateParts]]) | max(⌈√(state_rows/4096)⌉, ⌈√(trigger_rows/1024)⌉), clamped [1, cores] | stateful-query shuffle partitions sized to the query's own STATE + TRIGGER volumes, never core count — see the rule's scaladoc |
@@ -39,39 +34,16 @@ object Knobs {
     * deterministic quarter-identity-sample lower bound (13.3 → 4.3 s
     * at sf0.1; oracle + streaming twin replay the same winnow). */
   val GopherDupWinnowGate = 4
-  val GopherDupWinnowKey = "spark.graft.gopher.dupWinnow"
 
   /** Span-dedup winnow default: exact. */
   val SpanWinnowDefault = 1
-  val SpanWinnowKey = "spark.graft.span.winnow"
 
   /** Perceptual-fingerprint band-bucket cap (lossless sub-split). */
   val FpBandCapDefault = 64
-  val FpBandCapKey = "spark.graft.fingerprint.bandCap"
 
   /** Largest registry class-count broadcast during incremental
     * ingest; above it the probe joins by shuffle. */
   val IngestBcastClassCapDefault = 100000L
-  val IngestBcastClassCapKey = "spark.graft.ingest.bcastClassCap"
-
-  // ------------------------------------------------- per-knob resolvers
-  // The sanctioned conf path: read the session value here, pass it
-  // into the function's EXPLICIT knob parameter. The engine never
-  // reads these keys ambiently (gates stay conf-independent).
-  def spanWinnow(spark: SparkSession): Int =
-    resolveInt(spark, SpanWinnowKey, SpanWinnowDefault)
-  def gopherDupWinnow(spark: SparkSession): Int =
-    resolveInt(spark, GopherDupWinnowKey, GopherDupWinnowExact)
-  def fpBandCap(spark: SparkSession): Int =
-    resolveInt(spark, FpBandCapKey, FpBandCapDefault)
-  def ingestBcastClassCap(spark: SparkSession): Long =
-    resolveLong(spark, IngestBcastClassCapKey, IngestBcastClassCapDefault)
-
-  /** Conf-or-default resolution for user code. */
-  def resolveInt(spark: SparkSession, key: String, default: Int): Int =
-    spark.conf.getOption(key).map(_.toInt).getOrElse(default)
-  def resolveLong(spark: SparkSession, key: String, default: Long): Long =
-    spark.conf.getOption(key).map(_.toLong).getOrElse(default)
 
   // -------------------------------------- streaming state-store sizing
   /** State-row unit of the streaming partition-sizing rule (the

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session configuration shared by Verify, Bench, and tests.
+/** Session configuration shared by Verify, Bench, PlanDump, StreamingBench
+  * and the tests.
   *
   * These mirror what a production deployment would set cluster-wide:
   * UTC session time (oracle + Flink-epoch window parity), AQE on
@@ -23,6 +24,21 @@ object Sessions {
   val stateStoreProviders: Map[String, String] = Map(
     "hdfs" -> "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
     "rocksdb" -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** Local core count: `SPARK_GRAFT_CPUS`, default 4. */
+  val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+
+  /** The local-mode session: [[tune]]d, `local[cores]` with as many
+    * shuffle partitions as cores, no UI, WARN logging. */
+  def local(cores: Int = Sessions.cores): SparkSession = {
+    val spark = tune(SparkSession.builder())
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   def tune(b: SparkSession.Builder): SparkSession.Builder = {
     val base = b

@@ -52,8 +52,9 @@ import org.apache.spark.sql.functions._
   * the next round's joins read the cached blocks. One Spark job per
   * round instead of two. (An accumulator-fused variant that pushes
   * the count into an RDD map was measured SLOWER — re-rooting
-  * through RDD[Row] costs conversions and codegen: CcAbProbe — so
-  * the count stays a DataFrame action.)
+  * through RDD[Row] costs conversions and codegen: PERF.md
+  * "Round-6: measured fixes…", CcAbProbe added in 119ae52, since
+  * deleted — so the count stays a DataFrame action.)
   */
 object ConnectedComponents {
 
@@ -80,14 +81,17 @@ object ConnectedComponents {
     *              extra (empty-frontier, cheap) rounds past the
     *              fixpoint. Identical result for any k
     *              (CorpusPrepOpsSpec pins k=1 vs default vs 3 against
-    *              union-find); CcAbProbe's check2 row measures the
-    *              win.
+    *              union-find); PERF.md "Round-8: span-cap substrate,
+    *              CC action cadence…" measures the win (CcAbProbe's
+    *              check2 row; probe added in 119ae52, since deleted).
     * @param jumpAfter rounds before POINTER JUMPING kicks in. The
     *              jump (lbl ← lbl[lbl], a mins self-join) doubles
     *              propagation distance per round — the O(log
     *              diameter) guarantee — but costs a third exchange
-    *              every round, and the round-7 A/B (CcAbProbe, real
-    *              x30 graph, min-of-3) measured it a net LOSS on
+    *              every round, and the round-7 A/B (PERF.md "Round-7:
+    *              x45 winnowing at sf1…"; CcAbProbe from 119ae52,
+    *              since deleted; real x30 graph, min-of-3) measured
+    *              it a net LOSS on
     *              near-dup graphs, whose dense clusters settle in a
     *              handful of one-hop rounds anyway: no-jump 4.27 s
     *              vs jumped 6.65 s at sf0.1 (7 vs 6 rounds), tie at

@@ -1797,9 +1797,10 @@ object Extensions {
   // replays it as a recursive CTE.
   /** x30's graph input, materialized: (nodes(id), edges(src, dst)) —
     * the distinct-signature reps and the verified MinHash pair list.
-    * Exposed for the CcAbProbe A/B harness, which measures
-    * [[graft.ops.ConnectedComponents]] variants on the REAL graph
-    * shape rather than a synthetic fixture. */
+    * Its one caller is the x30 gate below. The round-7 A/B of
+    * [[graft.ops.ConnectedComponents]] variants ran on this input
+    * (PERF.md "Round-7: the x30 delta-vs-full A/B"; CcAbProbe, added
+    * in 119ae52, since deleted). */
   private[graft] def x30Input(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val sigs = sigTable(s, d).persist()
@@ -2073,19 +2074,6 @@ object Extensions {
         (col("n") - ceil(col("n") * lit(thr) - lit(1e-9)) + 1).cast("int"))
   }
 
-  /** x35's candidate stage: prefix-token equi-join + length filter +
-    * (optionally) the PPJoin POSITION filter. Ordered-set table in,
-    * `(rep_a, rep_b)` candidate pairs out.
-    *
-    * Position filter (lossless): for the first common token of a
-    * qualifying pair — which the prefix lemma places inside BOTH
-    * prefixes — no earlier token is shared, so the whole overlap sits
-    * at/after it: |A∩B| <= 1 + min(|A|−i, |B|−j) (1-based positions
-    * i,j). Qualifying pairs need |A∩B| >= ceil(t/(1+t)·(|A|+|B|)), so
-    * keeping every collision where the bound clears the threshold
-    * admits at least that first-token collision — pairs are only ever
-    * dropped when NO collision can carry enough overlap. Cuts the
-    * post-join `distinct` input without touching the result set. */
   /** x35's candidate stage, k=2 prefix extension (ED-Join-family
     * lemma): if |A∩B| >= α then the first two common tokens o1<o2
     * (global order) sit within BOTH extended prefixes of length
@@ -2124,6 +2112,9 @@ object Extensions {
     val lenOk =
       col("b.n") >= ceil(col("a.n") * lit(PfJaccard)) &&
         col("a.n") >= ceil(col("b.n") * lit(PfJaccard))
+    // alpha's epsilon keeps a float product landing a hair above an
+    // integer from EXCLUDING an admissible pair (over-admission is
+    // harmless, the verify is exact)
     val posOk =
       lit(2) + least(col("a.n") - col("a.i2") - 1,
                      col("b.n") - col("b.i2") - 1) >=
@@ -2131,27 +2122,6 @@ object Extensions {
     pairs.as("a").join(pairs.as("b"),
         col("a.t1") === col("b.t1") && col("a.t2") === col("b.t2") &&
           col("a.rep") < col("b.rep") && lenOk && posOk)
-      .select(col("a.rep").as("rep_a"), col("b.rep").as("rep_b"))
-      .distinct()
-  }
-
-  private[graft] def ssjoinCandidates(otab: DataFrame,
-                                      positional: Boolean = true): DataFrame = {
-    val pref = otab.select(col("rep"), col("n"),
-      posexplode(expr("slice(otoks, 1, plen)")).as(Seq("pos", "tok")))
-    val lenOk =
-      col("b.n") >= ceil(col("a.n") * lit(PfJaccard)) &&
-        col("a.n") >= ceil(col("b.n") * lit(PfJaccard))
-    // overlap threshold alpha = ceil(t/(1+t)·(na+nb)); epsilon keeps a
-    // float product landing a hair above an integer from EXCLUDING an
-    // admissible pair (over-admission is harmless, the verify is exact)
-    val posOk =
-      lit(1) + least(col("a.n") - col("a.pos") - 1,
-                     col("b.n") - col("b.pos") - 1) >=
-        ceil((col("a.n") + col("b.n")) * lit(PfJaccard / (1 + PfJaccard)) - lit(1e-9))
-    val cond = col("a.tok") === col("b.tok") && col("a.rep") < col("b.rep") &&
-      (if (positional) lenOk && posOk else lenOk)
-    pref.as("a").join(pref.as("b"), cond)
       .select(col("a.rep").as("rep_a"), col("b.rep").as("rep_b"))
       .distinct()
   }
@@ -3990,8 +3960,10 @@ object Extensions {
   // the gate pins the ERROR BOUND against the exact x61 rollup it
   // can check (the x18 pattern): relative intersection error ≤ 0.10
   // and absolute Jaccard error ≤ 0.08 — 3× the observed maxima
-  // (X63Probe: 3.6%/0.030 at sf0.01, 2.2%/0.030 at sf0.1; HLL lgK=12
-  // ≈ 1.6% RSD per estimate).
+  // (X63Probe, added with the gate in d4aaed8, since deleted: 3.6%/0.030
+  // at sf0.01, 2.2%/0.030 at sf0.1; HLL lgK=12 ≈ 1.6% RSD per
+  // estimate; the gate's cost is in PERF.md "Round-8: span-cap
+  // substrate…").
   private val x63 = GateQuery(
     "x63_overlap_hll",
     (s, d) => {
@@ -4215,11 +4187,11 @@ object Extensions {
         .select(split(col("bg"), " ").getItem(0).as("w1"), col("tf"))
         .groupBy(col("w1")).agg(sum(col("tf")).as("c_w1"))
       val vCtx = cW1.agg(count(lit(1)).as("v_ctx"))
-      // Round-16 NEGATIVE A/B (tools/R16AbProbe "lm"): scoring a
-      // per-BIGRAM (bg, bits) table (the [[lmBigramBits]] shape) and
-      // attaching it with one bg join — "scorer runs per distinct
-      // bigram, one fewer corpus-side join" on paper — measured
-      // SLOWER at sf0.1 (1.50 vs 1.46 min-of-3) AND at sf1 (7.81 vs
+      // Round-16 NEGATIVE A/B (VERDICT.md; R16AbProbe "lm" in 850da3d,
+      // since deleted): scoring a per-BIGRAM (bg, bits) table (the
+      // [[lmBigramBits]] shape) and attaching it with one bg join —
+      // "scorer runs per distinct bigram, one fewer corpus-side join"
+      // on paper — measured SLOWER at sf0.1 (1.50 vs 1.46 min-of-3) AND at sf1 (7.81 vs
       // 6.86): on this corpus distinct bigrams ≈ (doc,bigram) rows,
       // so the per-bigram saving is nil while the bits table's w1
       // exchange is additive; the count tables broadcast at any SF
@@ -5641,7 +5613,8 @@ object Extensions {
       // the coarse assignment feeds both the codebook training and
       // the encode UNPERSISTED on purpose: it is a stateless per-row
       // native encode over the persisted v, and the round-15 A/B
-      // (tools/LifecycleAbProbe) measured caching its wide output
+      // (OPTIMIZATION_r15.md §5; LifecycleAbProbe in cdc5c1f, since
+      // deleted) measured caching its wide output
       // SLOWER than recomputing it (3.38 s vs 3.17 s through the x80
       // pipeline, min-of-3 same session)
       val assigned = ivfPqAssign(v, cents)
@@ -6608,10 +6581,11 @@ object Extensions {
     * between a tractable join and a quadratic one (measured at sf1:
     * 24.0M doc-level distinct candidates collapse to class-level
     * pairs). */
-  // Round-15 NEGATIVE A/B (tools/LifecycleAbProbe, OPTIMIZATION_r15
-  // .md): collapsing this to ONE groupBy with first(arr) — "3
-  // exchanges → 1" on the plan — measured SLOWER through the full
-  // x86 ingest chain (5.16 s vs 4.24 s min-of-3, same session):
+  // Round-15 NEGATIVE A/B (OPTIMIZATION_r15.md §1; LifecycleAbProbe
+  // in cdc5c1f, since deleted): collapsing this to ONE groupBy with
+  // first(arr) — "3 exchanges → 1" on the plan — measured SLOWER
+  // through the full x86 ingest chain (5.16 s vs 4.24 s min-of-3,
+  // same session):
   // first() over an array column can't ride the fixed-width
   // HashAggregate fast path, while dropDuplicates' key-only dedup and
   // the class-scale join are cheap. The two-step form stays.
@@ -7009,8 +6983,8 @@ object Extensions {
         concat_ws(" ", col("kept")).as("clean")))
   }
 
-  // Round-15 NEGATIVE A/B (kept out of the tree, evidence in
-  // tools/ScrubAbProbe + OPTIMIZATION_r15.md): fusing the scrub with
+  // Round-15 NEGATIVE A/B (OPTIMIZATION_r15.md §6; ScrubAbProbe in
+  // dc33f60, since deleted): fusing the scrub with
   // its input's spanDedupCounts — one positional table serving both
   // the rewrite and the per-doc statistics — measured 13.3 s vs the
   // unfused 6.4 s at sf0.1, same session, min of 4 alternating

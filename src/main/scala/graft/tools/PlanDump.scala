@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import java.util.regex.Pattern
+import scala.util.matching.Regex
 
 /** Optimization-round measurement harness (guide §1): for each named
   * gate query, runs the full contracted result through the noop sink
@@ -12,10 +13,44 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * plan-shape evidence (Exchange count, join strategy, scan pushdown)
   * next to the empirical cost (where the bytes actually move).
   *
+  * The explain files are written [[canonical]], so two runs of one
+  * plan give byte-equal files and `diff -r` of two dump directories
+  * shows plan changes only.
+  *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <tag>
   *        <all|name1,name2,...> [passes]
   */
 object PlanDump {
+
+  private def renumber(text: String, re: Regex, prefix: String): String = {
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    re.replaceAllIn(text, m =>
+      prefix + ids.getOrElseUpdate(m.group(1), ids.size))
+  }
+
+  private val TmpSuffix = (Pattern.quote(System.getProperty("java.io.tmpdir")) +
+    """(/[\w.-]*?[A-Za-z_])\d+(?=[/\]\s,]|$)""").r
+
+  /** `plan` with its per-run identities made canonical: expression ids
+    * (`#n`) and `plan_id=n` renumbered in order of first appearance,
+    * and lambda class names, RDD ids, the source lines of RDD call
+    * sites and the random suffixes of temp directories masked. So are
+    * the ids of AQE query stages and of their codegen stages: inside
+    * an executed cached plan they follow the order in which
+    * concurrent stages finished (the tree's `*` still marks every
+    * codegen'd operator). */
+  private def canonical(plan: String): String = {
+    val ids = renumber(renumber(plan, """#(\d+)""".r, "#"),
+      """plan_id=(\d+)""".r, "plan_id=")
+    val masked = ids
+      .replaceAll("""\$Lambda[^@\s]*@[0-9a-f]+""", Regex.quoteReplacement("$Lambda"))
+      .replaceAll("""RDD\[\d+\]""", "RDD[_]")
+      .replaceAll("""\.scala:\d+""", ".scala:_")
+      .replaceAll("""\[codegen id : \d+\]""", "[codegen id : _]")
+      .replaceAll("""(\(\d+\) \w+QueryStage\n(?:(?!Arguments: )[^\n]*\n)*?Arguments: )\d+""", "$1_")
+    TmpSuffix.replaceAllIn(masked, m => Regex.quoteReplacement("<tmp>" + m.group(1) + "_"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
@@ -23,18 +58,7 @@ object PlanDump {
     val sel = args(3)
     val passes = if (args.length > 4) args(4).toInt else 2
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // conf A/B seam: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" (dev-only)
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v) }
-    val b0 = graft.Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-    val spark = extra.foldLeft(b0)((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger
@@ -73,7 +97,7 @@ object PlanDump {
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       java.nio.file.Files.write(outDir.resolve(s"${name}_$tag.txt"),
-        plan.getBytes("UTF-8"))
+        canonical(plan).getBytes("UTF-8"))
       var best = Double.MaxValue
       var bj = 0; var bs = 0; var bt = 0; var bsh = 0L; var bin = 0L
       for (_ <- 1 to passes) {

@@ -70,9 +70,10 @@ class CorpusPrepOpsSpec extends AnyFunSuite {
     }
     assert(got == expected, s"mismatch: ${got.toSet -- expected.toSet}")
     // the full-join shape (delta=false) reaches the identical fixpoint
-    // — the round-7 A/B keeps delta as default (CcAbProbe: three-way
-    // tie at min-of-4 on the real graph at sf0.1 AND sf1), and this
-    // pins that both shapes stay interchangeable
+    // — the round-7 A/B keeps delta as default (PERF.md "Round-7: the
+    // x30 delta-vs-full A/B", CcAbProbe from 119ae52, since deleted:
+    // three-way tie at min-of-4 on the real graph at sf0.1 AND sf1),
+    // and this pins that both shapes stay interchangeable
     val gotFull = ConnectedComponents.label(nodes, edges, delta = false)
       .as[(Long, Long)].collect().toMap
     assert(gotFull == expected, "delta=false diverged from union-find")

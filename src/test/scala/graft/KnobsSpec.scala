@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins every [[Knobs]] default (a drive-by change must break a test,
-  * not a hash gate) and the conf-or-default resolution path. */
+  * not a hash gate) and the sizing rules. */
 class KnobsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -29,37 +29,6 @@ class KnobsSpec extends AnyFunSuite {
       .select(col("rep_5")).as[Long].collect().head
     assert(exact == explicit1, "default must be the exact (winnow=1) form")
     assert(exact > 0L, "fixture premise: the doc has duplicated 5-grams")
-  }
-
-  test("conf-or-default resolution") {
-    val key = Knobs.GopherDupWinnowKey
-    assert(Knobs.resolveInt(spark, key, Knobs.GopherDupWinnowExact) == 1)
-    spark.conf.set(key, "8")
-    try assert(Knobs.resolveInt(spark, key, 1) == 8)
-    finally spark.conf.unset(key)
-    assert(Knobs.resolveLong(spark, Knobs.IngestBcastClassCapKey,
-      Knobs.IngestBcastClassCapDefault) == 100000L)
-  }
-
-  test("per-knob resolvers: session conf reaches the caller, never " +
-    "the engine's ambient defaults") {
-    // without conf: the pinned defaults
-    assert(Knobs.spanWinnow(spark) == Knobs.SpanWinnowDefault)
-    assert(Knobs.gopherDupWinnow(spark) == Knobs.GopherDupWinnowExact)
-    assert(Knobs.fpBandCap(spark) == Knobs.FpBandCapDefault)
-    assert(Knobs.ingestBcastClassCap(spark) ==
-      Knobs.IngestBcastClassCapDefault)
-    // with conf: the resolver carries the session value (the caller
-    // passes it into the explicit parameter)
-    spark.conf.set(Knobs.SpanWinnowKey, "4")
-    spark.conf.set(Knobs.FpBandCapKey, "32")
-    try {
-      assert(Knobs.spanWinnow(spark) == 4)
-      assert(Knobs.fpBandCap(spark) == 32)
-    } finally {
-      spark.conf.unset(Knobs.SpanWinnowKey)
-      spark.conf.unset(Knobs.FpBandCapKey)
-    }
   }
 
   test("streaming state-partition sizing: max of the ceil-sqrt state " +

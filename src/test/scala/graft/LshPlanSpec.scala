@@ -130,17 +130,21 @@ class LshPlanSpec extends AnyFunSuite {
       .toDF("rep", "otoks")
       .withColumn("n", size(col("otoks")).cast("long"))
       .withColumn("plen", (col("n") - ceil(col("n") * lit(0.9)) + 1).cast("int"))
-    val loose = Extensions.ssjoinCandidates(otab, positional = false)
+    val cand = Extensions.ssjoinCandidates2(otab)
       .as[(Long, Long)].collect().toSet
-    val tight = Extensions.ssjoinCandidates(otab)
-      .as[(Long, Long)].collect().toSet
-    assert(tight.subsetOf(loose), "position filter may only prune")
-    // (1,2) first share "a" at position 2 of both: ubound = 1+8 = 9 < 10
-    // — positionally impossible (their jac is 9/11 < 0.9), so pruned
-    assert(loose.contains((1L, 2L)) && !tight.contains((1L, 2L)))
-    // (3,4) share "a" at position 1 of both: ubound = 10 >= 10 — kept
-    // via that collision even though their "b"@2/2 collision fails
-    assert(tight.contains((3L, 4L)))
+    spark.catalog.clearCache() // it persists its pair-prefix table
+    // extended prefixes (plen + 1 = 3 tokens) are r1,a,b / r2,a,b /
+    // a,b,c / a,b,c: (1,2) and (3,4) each collide on a prefix token
+    // pair and pass the length filter, so only the position filter
+    // can drop either
+    // (1,2) first share the pair (a,b) with b at 0-based position 2 of both:
+    // ubound = 2 + min(10-2-1, 10-2-1) = 9 < 10 — positionally
+    // impossible (their jac is 9/11 < 0.9), so pruned
+    assert(!cand.contains((1L, 2L)))
+    // (3,4) share (a,b) with b at position 1 of both: ubound =
+    // 2 + 8 = 10 >= 10 — kept via that collision even though their
+    // (a,c)/(b,c) collisions fail
+    assert(cand.contains((3L, 4L)))
   }
 
   test("x04/x19 broadcasts are candidate-restricted, never corpus-sized") {

@@ -32,11 +32,7 @@ object StreamingBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val batchRows = 10000
-    val spark: SparkSession = Sessions.tune(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = Sessions.local(32)
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

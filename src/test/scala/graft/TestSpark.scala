@@ -4,14 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = Sessions.tune(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4)
 }
