@@ -11,6 +11,15 @@ import org.apache.spark.sql.SparkSession
   * microsecond parquet output. `nanosAsLong` is required to read the
   * driver's `events.parquet` (TIMESTAMP_NS) at all — see
   * [[Tables.events]].
+  *
+  * `file:` is bound, for both the `FileSystem` API and FileContext, to
+  * [[graft.fs.NioLocalFileSystem]] and [[graft.fs.NioLocalFs]]: Hadoop's
+  * checksummed local filesystem with permissions and statuses done
+  * through `java.nio` instead of a forked `chmod`/`ls`/`readlink` per
+  * file. That reaches every offset and commit log, state-store file,
+  * parquet write and commit, and file listing. Hadoop caches `file:`
+  * JVM-wide on first use, so a process must not fetch it before its
+  * first session is built.
   */
 object Sessions {
 
@@ -47,6 +56,8 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.driver.host", "127.0.0.1")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.fs.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.fs.NioLocalFs].getName)
     sys.env.get("SPARK_GRAFT_STATE_STORE")
       .flatMap(f => stateStoreProviders.get(f.toLowerCase))
       .fold(base)(cls =>

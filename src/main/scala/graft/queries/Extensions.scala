@@ -488,11 +488,10 @@ object Extensions {
   // ---------------------------------------------------------------- x05
   // SimHash: 32-bit signature; bit b set iff Σ_token (±1 by bit b of
   // the token's md5-derived hash) is non-negative. The 32 per-bit
-  // vote counters live in ONE fused [[graft.functions.SimHashAgg]]
-  // buffer (bit-identical to 32 separate sum(when) aggregate columns
-  // — SimHashAggSpec — but one agg state instead of 32, and 32× fewer
-  // aggregate expressions for codegen to carry). The oracle keeps the
-  // independent 32-column construction.
+  // vote counters are tallied per row inside ONE native
+  // [[graft.functions.SimHashArr]] expression (bit-identical to the
+  // grouped construction — SimHashArrSpec). The oracle keeps the
+  // independent explode + 32-column sum(when) construction.
   private val x05 = GateQuery(
     "x05_simhash",
     (s, d) =>
