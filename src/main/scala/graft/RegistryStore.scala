@@ -641,7 +641,7 @@ object RegistryStore {
       // concurrently (racing consumers would each recompute the
       // corpus-scale classesOf aggregation while the cache fills)
       staged.count()
-      val bt = graft.queries.Extensions
+      val bt = graft.ops.Banding
         .bandTableArr(staged.select(col("sig").as("rep"), col("arr")), "t:")
         .withColumnRenamed("rep", "sig")
         .persist()
@@ -662,7 +662,7 @@ object RegistryStore {
           val bF = scala.concurrent.Future {
             spark.sparkContext.setJobDescription(s"stage bands g=$g")
             bt.repartitionByRange(
-                graft.queries.Extensions.NumBands * filesPerBand,
+                graft.ops.Banding.NumBands * filesPerBand,
                 col("band"), col("k0"))
               .sortWithinPartitions(col("band"), col("k0"))
               .write.partitionBy("band").parquet(bandsDir(root, g))

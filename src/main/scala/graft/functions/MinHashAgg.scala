@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.ops.Banding
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -18,7 +19,7 @@ import java.nio.ByteBuffer
   * of sixteen agg states, and 16× fewer aggregate expressions for
   * codegen to carry).
   *
-  * The (aᵢ, bᵢ) family matches graft.queries.Extensions — the
+  * The (aᵢ, bᵢ) family is [[graft.ops.Banding]]'s — the
   * textbook single-base-hash construction: one md5-derived hash per
   * token, 16 affine transforms. aᵢ·h < 2⁵², so the arithmetic is
   * exact in longs (and in the doubles an oracle might route
@@ -30,10 +31,6 @@ case class MinHashAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Long]] {
-
-  private val Mod32 = 4294967296L
-  private def a(i: Int): Long = 1000003L + 2L * i
-  private def b(i: Int): Long = 12345L + 7919L * i
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
@@ -55,7 +52,7 @@ case class MinHashAgg(
       val h = v.asInstanceOf[Long]
       var i = 0
       while (i < numHashes) {
-        val m = (h * a(i) + b(i)) % Mod32
+        val m = (h * Banding.mhA(i) + Banding.mhB(i)) % Banding.Mod32
         if (m < buf(i)) buf(i) = m
         i += 1
       }

@@ -69,16 +69,14 @@ case class MinHashArr(child: Expression, prefix: String)
 }
 
 object MinHashArr {
-  private val NumHashes = 16
+  import graft.ops.Banding.{NumMinhash, mhA, mhB}
   private val Mod32Mask = 0xFFFFFFFFL // (h·a+b) mod 2^32 == & mask
-  private def a(i: Int): Long = 1000003L + 2L * i
-  private def b(i: Int): Long = 12345L + 7919L * i
 
   /** Null when no non-null element exists (empty or all-null array) —
     * the aggregate path's "no shingle rows" absence; a non-null
     * degenerate minima vector would band-join every such doc. */
   def compute(arr: ArrayData, prefix: Array[Byte]): ArrayData = {
-    val minima = Array.fill(NumHashes)(Long.MaxValue)
+    val minima = Array.fill(NumMinhash)(Long.MaxValue)
     val md = java.security.MessageDigest.getInstance("MD5")
     var e = 0
     var processed = 0
@@ -96,8 +94,8 @@ object MinHashArr {
       val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
         ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
       var i = 0
-      while (i < NumHashes) {
-        val m = (h * a(i) + b(i)) & Mod32Mask
+      while (i < NumMinhash) {
+        val m = (h * mhA(i) + mhB(i)) & Mod32Mask
         if (m < minima(i)) minima(i) = m
         i += 1
       }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{GateQuery, Tables}
 import graft.GateQuery.ordered
+import graft.ops.Banding
 import graft.ops.Cols._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,13 +55,6 @@ import org.apache.spark.sql.expressions.Window
 object Extensions {
 
   private val JaccardThreshold = 0.9
-  // 4 bands x 4 rows: the standard banding for a ~0.9 Jaccard
-  // threshold (t* = (1/b)^(1/r) ≈ 0.71, recall ≈ 0.986 at s = 0.9).
-  // 2-row bands admit ~4x the candidates on this high-similarity
-  // corpus (22.5M vs 5.5M pairs at sf0.1) for negligible extra recall.
-  private[graft] val NumMinhash = 16
-  private[graft] val BandRows = 4
-  private[graft] val NumBands = NumMinhash / BandRows
 
   /** 32-bit integer from the first 8 hex chars of an md5 column. */
   private[graft] def hex32(e: Column): Column =
@@ -131,108 +125,8 @@ object Extensions {
     docMasks(s, d).groupBy(col("sig"), col("mask"))
       .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("cnt"))
 
-  /** LSH candidate pairs from a band table (`rep`, `band`, `k0..k3`):
-    * a self equi-join on the whole band yields (rep_a, rep_b) with
-    * rep_a < rep_b, dedup'd. Shared by the token-set (x04) and
-    * bigram (x14) dedup paths.
-    *
-    * Deliberately NO broadcast hint: the join keys (band, k0..k3)
-    * make this a plain shuffle-able equi-join. At 100 TB the band
-    * table is proportional to |distinct signatures| — a forced
-    * broadcast (as this had in round 2) is an OOM, while size-gated
-    * AQE still picks broadcast when it genuinely fits (LshPlanSpec
-    * asserts the degraded path).
-    *
-    * CALLERS MUST PERSIST+MATERIALIZE `banded` (or its immediate
-    * parent) first. With AQE off, static ReuseExchange dedups the two
-    * identical sides (LshPlanSpec); with AQE ON, runtime stage reuse
-    * does NOT fire across the self-join's InMemoryTableScan-rooted
-    * subtrees, and the whole tokenize → md5 → minhash aggregation
-    * runs once per side (measured 3.8s vs 2.4s at sf0.1, and it is
-    * the CPU-heavy part at any scale).
-    *
-    * `maxBucket` caps a band bucket's membership: a bucket of k
-    * signatures emits k·(k-1)/2 candidates, so one ultra-hot bucket
-    * (a near-identical cluster that survives exact-class collapse)
-    * turns quadratic — 1M members is 5·10^11 pairs on one key. Above
-    * the cap the whole bucket is dropped (standard LSH-dedup
-    * hygiene): its members are near-identical to each other, so they
-    * keep co-occurring in their OTHER bands' (smaller) buckets, and
-    * the recall loss is confined to the hot cluster. The bucket count
-    * is a window over the join's own partitioning key, so the extra
-    * pass rides the exchange the join already needs. Default
-    * unlimited: the gate corpus has no pathological buckets and the
-    * oracle replays uncapped semantics. */
-  private[graft] def lshCandidates(banded: DataFrame,
-                                   maxBucket: Int = Int.MaxValue): DataFrame = {
-    val pruned =
-      if (maxBucket == Int.MaxValue) banded
-      else {
-        val bucketKey = col("band") +: (0 until BandRows).map(j => col(s"k$j"))
-        banded.withColumn("__bn",
-            count(lit(1)).over(Window.partitionBy(bucketKey: _*)))
-          .filter(col("__bn") <= maxBucket).drop("__bn")
-      }
-    val joinCond = col("a.band") === col("b.band") &&
-      (0 until BandRows).map(j => col(s"a.k$j") === col(s"b.k$j")).reduce(_ && _) &&
-      col("a.rep") < col("b.rep")
-    pruned.as("a").join(pruned.as("b"), joinCond)
-      .select(col("a.rep").as("rep_a"), col("b.rep").as("rep_b"))
-      .distinct()
-  }
-
-  /** Affine coefficients for the minhash family: h_i = (a·h + b) mod
-    * 2^32 over one md5-derived 32-bit base hash — the textbook
-    * construction, and 16× less hashing than one md5 per seed.
-    * a·h < 2^52, so the arithmetic is exact in both BIGINT and the
-    * doubles DuckDB might route through. */
-  private def mhA(i: Int): Long = 1000003L + 2L * i
-  private def mhB(i: Int): Long = 12345L + 7919L * i
-  private val Mod32 = 4294967296L
-
-  /** LSH band table (`rep`, `band`, `k0..k3`) over an exploded token
-    * column (`rep`, `tok`); the base hash is md5-derived with a
-    * [[prefix]] so token-set (x04) and bigram (x14) families are
-    * independent. The 16 minima come from ONE native
-    * [[graft.functions.MinHashAgg]] buffer (same affine family,
-    * bit-identical values — MinHashAggSpec), and the band structs are
-    * sliced straight off the aggregate's array output — no 16-column
-    * intermediate projection, no extra materialization between the
-    * aggregation and the candidate join. */
-  private[graft] def bandTable(toks: DataFrame, prefix: String): DataFrame = {
-    val h = toks.withColumn("h", hex32(md5(concat(lit(prefix), col("tok")))))
-    val mh = h.groupBy(col("rep"))
-      .agg(graft.functions.MinHashAgg.minhashAgg(col("h"), NumMinhash).as("mhs"))
-    bandsOf(mh)
-  }
-
-  /** The zero-shuffle band table: per-row fused minhash over a
-    * shingle ARRAY column (`rep`, `arr`) via the native
-    * [[graft.functions.MinHashArr]] — no explode, no aggregation; the
-    * LSH pipeline's first wide op becomes the candidate join itself.
-    * Shingle-less rows (empty array → null minima) drop out exactly
-    * as they never produced aggregate rows in [[bandTable]]
-    * (MinHashArrSpec pins band-table equality). */
-  private[graft] def bandTableArr(reps: DataFrame, prefix: String): DataFrame =
-    bandsOf(reps
-      .select(col("rep"),
-        graft.functions.MinHashArr.minhashArr(col("arr"), prefix).as("mhs"))
-      .filter(col("mhs").isNotNull))
-
-  /** Slice a (`rep`, `mhs`) minhash table into the (band, k0..k3)
-    * equi-join shape. */
-  private[graft] def bandsOf(mh: DataFrame): DataFrame = {
-    val bandStructs = (0 until NumBands).map { b =>
-      struct((0 until BandRows).map(j =>
-        element_at(col("mhs"), BandRows * b + j + 1).as(s"k$j")): _*)
-    }
-    mh.select(col("rep"), posexplode(array(bandStructs: _*)).as(Seq("band", "ks")))
-      .select(col("rep") +: col("band") +:
-        (0 until BandRows).map(j => col(s"ks.k$j").as(s"k$j")): _*)
-  }
-
   /** Per-ROW minhash construction for streaming: the same md5 base
-    * hash and 16-transform affine family as [[bandTable]] /
+    * hash and 16-transform affine family ([[Banding.mhA]]) as
     * [[graft.functions.MinHashAgg]], but computed with array HOFs
     * over one row's token set instead of a grouped aggregate — a
     * stream can minhash each document statelessly in a projection.
@@ -246,17 +140,8 @@ object Extensions {
 
   /** 16 affine minima over a base-hash array column ([[baseHashes]]). */
   private[graft] def minhashOf(hs: Column): Column =
-    array((0 until NumMinhash).map { i =>
-      array_min(transform(hs, h => (h * mhA(i) + mhB(i)) % Mod32))
-    }: _*)
-
-  /** The 4 LSH band keys of a minhash array, as "band:k0:k1:k2:k3"
-    * strings — the streaming join/state key twin of [[bandTable]]'s
-    * (band, k0..k3) equi-join columns. */
-  private[graft] def bandKeysOf(mhs: Column): Column =
-    array((0 until NumBands).map { b =>
-      concat_ws(":", (lit(b) +: (0 until BandRows).map(j =>
-        element_at(mhs, BandRows * b + j + 1))): _*)
+    array((0 until Banding.NumMinhash).map { i =>
+      array_min(transform(hs, h => (h * Banding.mhA(i) + Banding.mhB(i)) % Banding.Mod32))
     }: _*)
 
   /** The hashed 64-bit token-set bitmask as a standalone column
@@ -433,10 +318,10 @@ object Extensions {
     val repArrs = sigs.join(docArrs, col("rep") === col("doc_id"))
       .select(col("rep"), col("arr"))
     // the self-join reads the band table twice and AQE does not reuse
-    // the stage (see lshCandidates) — materialize it once
-    val banded = bandTableArr(repArrs, "t:").persist()
+    // the stage (see Banding.selfPairs) — materialize it once
+    val banded = Banding.bandTableArr(repArrs, "t:").persist()
     banded.count()
-    val cand = lshCandidates(banded).persist()
+    val cand = Banding.selfPairs(banded).persist()
     cand.count()
     // verify-side masks: semi-join the signature table down to the ids
     // that actually appear in a candidate pair and broadcast only those
@@ -456,26 +341,16 @@ object Extensions {
   }
 
   /** x04's oracle CTE chain (everything after sigs), shared with x19. */
-  private def duckMinhashCtes: String = {
-    val mhCols = (0 until NumMinhash).map { i =>
-      s"MIN((h * ${mhA(i)} + ${mhB(i)}) % $Mod32) AS mh$i"
-    }.mkString(", ")
-    val bandSelects = (0 until NumBands).map { b =>
-      val ks = (0 until BandRows)
-        .map(j => s"mh${BandRows * b + j} AS k$j").mkString(", ")
-      s"SELECT rep, $b AS band, $ks FROM mh"
-    }.mkString(" UNION ALL ")
-    val joinKeys = "a.band = b.band AND " +
-      (0 until BandRows).map(j => s"a.k$j = b.k$j").mkString(" AND ")
+  private def duckMinhashCtes: String =
     s"""rep_toks AS (
           SELECT s.rep, unnest(list_distinct(string_split(doc.text, ' '))) AS tok
           FROM sigs s JOIN documents doc ON doc.doc_id = s.rep),
         th AS (SELECT rep, ${duckHex32("md5('t:' || tok)")} AS h FROM rep_toks),
-        mh AS (SELECT rep, $mhCols FROM th GROUP BY rep),
-        banded AS ($bandSelects),
+        mh AS (SELECT rep, ${Banding.duckMinhashCols} FROM th GROUP BY rep),
+        banded AS (${Banding.duckMinhashBands("mh")}),
         cand AS (
           SELECT DISTINCT a.rep AS rep_a, b.rep AS rep_b
-          FROM banded a JOIN banded b ON $joinKeys AND a.rep < b.rep),
+          FROM banded a JOIN banded b ON ${Banding.duckBandJoin("a", "b")} AND a.rep < b.rep),
         verified AS (
           SELECT c.rep_a, c.rep_b,
             CAST(bit_count(sa.mask & sb.mask) AS DOUBLE) / bit_count(sa.mask | sb.mask) AS jac
@@ -483,7 +358,6 @@ object Extensions {
           JOIN sigs sa ON sa.rep = c.rep_a
           JOIN sigs sb ON sb.rep = c.rep_b
           WHERE CAST(bit_count(sa.mask & sb.mask) AS DOUBLE) / bit_count(sa.mask | sb.mask) >= $JaccardThreshold)"""
-  }
 
   // ---------------------------------------------------------------- x05
   // SimHash: 32-bit signature; bit b set iff Σ_token (±1 by bit b of
@@ -911,10 +785,10 @@ object Extensions {
         .select(col("rep"), bigramsExpr.as("bgs"))
         .persist()
       reps.count()
-      val banded = bandTableArr(
+      val banded = Banding.bandTableArr(
         reps.select(col("rep"), col("bgs").as("arr")), "b:").persist()
-      banded.count() // self-join side dedup — see lshCandidates
-      val cand = lshCandidates(banded).persist()
+      banded.count() // self-join side dedup — see Banding.selfPairs
+      val cand = Banding.selfPairs(banded).persist()
       cand.count()
       // verify-side bigrams: semi-join reps down to the ids that
       // actually appear in a candidate pair, and broadcast only those —
@@ -932,17 +806,7 @@ object Extensions {
         .filter(col("jac") >= NgramThreshold)
         .select(col("rep_a"), col("rep_b"), col("jac")))
     },
-    Some {
-      val mhCols = (0 until NumMinhash).map { i =>
-        s"MIN((h * ${mhA(i)} + ${mhB(i)}) % $Mod32) AS mh$i"
-      }.mkString(", ")
-      val bandSelects = (0 until NumBands).map { b =>
-        val ks = (0 until BandRows)
-          .map(j => s"mh${BandRows * b + j} AS k$j").mkString(", ")
-        s"SELECT rep, $b AS band, $ks FROM mh"
-      }.mkString(" UNION ALL ")
-      val joinKeys = "a.band = b.band AND " +
-        (0 until BandRows).map(j => s"a.k$j = b.k$j").mkString(" AND ")
+    Some(
       s"""WITH sigs AS (
              SELECT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS sig,
                     min(doc_id) AS rep
@@ -954,11 +818,11 @@ object Extensions {
                ON d2.doc_id = s.rep),
            bg_toks AS (SELECT rep, unnest(bgs) AS tok FROM reps),
            th AS (SELECT rep, ${duckHex32("md5('b:' || tok)")} AS h FROM bg_toks),
-           mh AS (SELECT rep, $mhCols FROM th GROUP BY rep),
-           banded AS ($bandSelects),
+           mh AS (SELECT rep, ${Banding.duckMinhashCols} FROM th GROUP BY rep),
+           banded AS (${Banding.duckMinhashBands("mh")}),
            cand AS (
              SELECT DISTINCT a.rep AS rep_a, b.rep AS rep_b
-             FROM banded a JOIN banded b ON $joinKeys AND a.rep < b.rep)
+             FROM banded a JOIN banded b ON ${Banding.duckBandJoin("a", "b")} AND a.rep < b.rep)
           SELECT c.rep_a, c.rep_b,
             CAST(len(list_intersect(ra.bgs, rb.bgs)) AS DOUBLE) /
               (len(ra.bgs) + len(rb.bgs) - len(list_intersect(ra.bgs, rb.bgs))) AS jac
@@ -967,8 +831,7 @@ object Extensions {
           JOIN reps rb ON rb.rep = c.rep_b
           WHERE CAST(len(list_intersect(ra.bgs, rb.bgs)) AS DOUBLE) /
               (len(ra.bgs) + len(rb.bgs) - len(list_intersect(ra.bgs, rb.bgs))) >= $NgramThreshold
-          ORDER BY 1,2,3"""
-    })
+          ORDER BY 1,2,3"""))
 
   // ---------------------------------------------------------------- x15
   // BPE-ish tokenization: letter runs, digit runs, and punctuation
@@ -1322,10 +1185,7 @@ object Extensions {
         sh.select(col("rep"), lit(j).as("band"),
           shiftright(half, 16 * (j % 2)).bitwiseAND(lit(65535L)).as("bv"))
       }.reduce(_ unionAll _)
-      val cand = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.rep") < col("b.rep"))
-        .select(col("a.rep").as("rep_a"), col("b.rep").as("rep_b")).distinct()
+      val cand = Banding.selfPairs(banded, keys = Banding.ValueKeys)
       val ha = sh.select(col("rep").as("rep_a"), col("sh0").as("sh0_a"),
         col("sh1").as("sh1_a"))
       val hb = sh.select(col("rep").as("rep_b"), col("sh0").as("sh0_b"),
@@ -1344,10 +1204,10 @@ object Extensions {
       val assemble = (0 until 32).map { b =>
         s"(CASE WHEN b$b >= 0 THEN ${1L << b} ELSE 0 END)"
       }.mkString(" + ")
-      val bandSelects = (0 until SimHashBands).map { j =>
+      val bandSelects = Banding.duckBands("rep", "sh", SimHashBands) { j =>
         val half = if (j < 2) "sh0" else "sh1"
-        s"SELECT rep, $j AS band, ($half >> ${16 * (j % 2)}) & 65535 AS bv FROM sh"
-      }.mkString(" UNION ALL ")
+        s"($half >> ${16 * (j % 2)}) & 65535 AS bv"
+      }
       s"""WITH $duckMasksCte,
           rep_toks AS (
             SELECT s.rep, unnest(list_distinct(string_split(doc.text, ' '))) AS tok
@@ -1365,7 +1225,7 @@ object Extensions {
           cand AS (
             SELECT DISTINCT a.rep AS rep_a, b.rep AS rep_b
             FROM banded a JOIN banded b
-              ON a.band = b.band AND a.bv = b.bv AND a.rep < b.rep)
+              ON ${Banding.duckBandJoin("a", "b", Banding.ValueKeys)} AND a.rep < b.rep)
           SELECT c.rep_a, c.rep_b,
             CAST(bit_count(xor(sa.sh0, sb.sh0)) +
                  bit_count(xor(sa.sh1, sb.sh1)) AS BIGINT) AS hamming
@@ -1684,29 +1544,6 @@ object Extensions {
     }
   }
 
-  /** SRP candidate pairs from a (vec_id, band, bv) band table — the
-    * x22/x04 equi-join shape on the (band, byte) key. `maxBucket` is
-    * the same hot-bucket hygiene as [[lshCandidates]]: a degenerate
-    * embedding corpus (e.g. many zero-ish vectors whose sign dots all
-    * tie to ≥ 0) can pile one band byte into a quadratic bucket; above
-    * the cap the whole bucket is dropped, and its members keep
-    * co-occurring in their other bands' smaller buckets. The count
-    * window rides the exchange the join already needs. Default
-    * unlimited — the oracle replays uncapped semantics. */
-  private[graft] def srpCandidates(banded: DataFrame,
-                                   maxBucket: Int = Int.MaxValue): DataFrame = {
-    val pruned =
-      if (maxBucket == Int.MaxValue) banded
-      else banded.withColumn("__bn",
-          count(lit(1)).over(Window.partitionBy(col("band"), col("bv"))))
-        .filter(col("__bn") <= maxBucket).drop("__bn")
-    pruned.as("a").join(pruned.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-  }
-
   private val x29 = GateQuery(
     "x29_dedup_srp",
     (s, d) => {
@@ -1738,8 +1575,9 @@ object Extensions {
           .as(Seq("idx", "s")))
         .select(col("vec_id"), col("s.pb").as("band"), col("s.pv").as("bv"))
         .persist()
-      banded.count() // self-join side dedup — see lshCandidates
-      val cand = srpCandidates(banded)
+      banded.count() // self-join side dedup — see Banding.selfPairs
+      val cand = Banding.selfPairs(banded, ("id_a", "id_b"), id = "vec_id",
+        keys = Banding.ValueKeys)
       val ea = Tables.embeddings(s, d)
         .select(col("vec_id").as("id_a"), col("embedding").as("ea"))
       val eb = Tables.embeddings(s, d)
@@ -1757,9 +1595,7 @@ object Extensions {
           s"(CASE WHEN ${duckDot(SrpBandBits * b + j)} >= 0 THEN ${1L << j} ELSE 0 END)"
         }.mkString("(", " + ", s") AS bv$b")
       }.mkString(", ")
-      val bandSelects = (0 until SrpBands)
-        .map(b => s"SELECT vec_id, $b AS band, bv$b AS bv FROM sig")
-        .mkString(" UNION ALL ")
+      val bandSelects = Banding.duckBands("vec_id", "sig", SrpBands)(b => s"bv$b AS bv")
       s"""WITH v AS (
             SELECT vec_id,
               list_transform(embedding, x -> CAST(FLOOR(x * 1000) AS BIGINT)) AS qv
@@ -1771,7 +1607,7 @@ object Extensions {
             SELECT id_a, id_b FROM (
               SELECT a.vec_id AS id_a, b.vec_id AS id_b, count(*) AS nb
               FROM banded a JOIN banded b
-                ON a.band = b.band AND a.bv = b.bv AND a.vec_id < b.vec_id
+                ON ${Banding.duckBandJoin("a", "b", Banding.ValueKeys)} AND a.vec_id < b.vec_id
               GROUP BY 1, 2)
             WHERE nb >= 2)
           SELECT c.id_a, c.id_b,
@@ -2104,7 +1940,7 @@ object Extensions {
       .select(col("rep"), col("n"), col("t1"), col("t2"), col("i2"))
       .persist()
     // both self-join sides consume the pair-prefix table, and (the
-    // lshCandidates rule) AQE stage reuse does NOT fire across the
+    // Banding.selfPairs rule) AQE stage reuse does NOT fire across the
     // two identical InMemoryTableScan-rooted subtrees — without the
     // persist the double posexplode chain evaluates once per side
     pairs.count()
@@ -2623,16 +2459,11 @@ object Extensions {
         .select(col("doc_id"), bigramsExpr.as("bgs"))
         .persist()
       corp.count()
-      val bandB = bandTableArr(
+      val bandB = Banding.bandTableArr(
         bench.select(col("bench_id").as("rep"), col("bgs_b").as("arr")), "b:")
-      val bandC = bandTableArr(
+      val bandC = Banding.bandTableArr(
         corp.select(col("doc_id").as("rep"), col("bgs").as("arr")), "b:")
-      val joinCond = col("c.band") === col("b.band") &&
-        (0 until BandRows).map(j => col(s"c.k$j") === col(s"b.k$j"))
-          .reduce(_ && _)
-      val cand = bandC.as("c").join(broadcast(bandB.as("b")), joinCond)
-        .select(col("c.rep").as("doc_id"), col("b.rep").as("bench_id"))
-        .distinct()
+      val cand = Banding.crossPairs(bandC, broadcast(bandB), ("doc_id", "bench_id"))
       val inter = size(array_intersect(col("bgs"), col("bgs_b")))
       val jac = inter.cast("double") /
         (size(col("bgs")) + size(col("bgs_b")) - inter)
@@ -2641,17 +2472,7 @@ object Extensions {
         .filter(col("jac") >= FuzzyThreshold)
         .select(col("doc_id"), col("bench_id"), col("jac")))
     },
-    Some {
-      val mhCols = (0 until NumMinhash).map { i =>
-        s"MIN((h * ${mhA(i)} + ${mhB(i)}) % $Mod32) AS mh$i"
-      }.mkString(", ")
-      def bandSelects(src: String) = (0 until NumBands).map { b =>
-        val ks = (0 until BandRows)
-          .map(j => s"mh${BandRows * b + j} AS k$j").mkString(", ")
-        s"SELECT rep, $b AS band, $ks FROM $src"
-      }.mkString(" UNION ALL ")
-      val joinKeys = "c.band = b.band AND " +
-        (0 until BandRows).map(j => s"c.k$j = b.k$j").mkString(" AND ")
+    Some(
       s"""WITH tks AS (
              SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
            bench AS (
@@ -2664,13 +2485,13 @@ object Extensions {
            ct AS (SELECT doc_id AS rep, unnest(bgs) AS tok FROM corp),
            bth AS (SELECT rep, ${duckHex32("md5('b:' || tok)")} AS h FROM bt),
            cth AS (SELECT rep, ${duckHex32("md5('b:' || tok)")} AS h FROM ct),
-           bmh AS (SELECT rep, $mhCols FROM bth GROUP BY rep),
-           cmh AS (SELECT rep, $mhCols FROM cth GROUP BY rep),
-           bband AS (${bandSelects("bmh")}),
-           cband AS (${bandSelects("cmh")}),
+           bmh AS (SELECT rep, ${Banding.duckMinhashCols} FROM bth GROUP BY rep),
+           cmh AS (SELECT rep, ${Banding.duckMinhashCols} FROM cth GROUP BY rep),
+           bband AS (${Banding.duckMinhashBands("bmh")}),
+           cband AS (${Banding.duckMinhashBands("cmh")}),
            cand AS (
              SELECT DISTINCT c.rep AS doc_id, b.rep AS bench_id
-             FROM cband c JOIN bband b ON $joinKeys)
+             FROM cband c JOIN bband b ON ${Banding.duckBandJoin("c", "b")})
           SELECT ca.doc_id, ca.bench_id,
             CAST(len(list_intersect(co.bgs, be.bgs_b)) AS DOUBLE) /
               (len(co.bgs) + len(be.bgs_b) - len(list_intersect(co.bgs, be.bgs_b))) AS jac
@@ -2679,8 +2500,7 @@ object Extensions {
           JOIN bench be ON be.bench_id = ca.bench_id
           WHERE CAST(len(list_intersect(co.bgs, be.bgs_b)) AS DOUBLE) /
               (len(co.bgs) + len(be.bgs_b) - len(list_intersect(co.bgs, be.bgs_b))) >= $FuzzyThreshold
-          ORDER BY 1,2,3"""
-    })
+          ORDER BY 1,2,3"""))
 
   // ---------------------------------------------------------------- x43
   // Keyless numeric range join ([[graft.ops.RangeJoin]]): customers
@@ -3572,16 +3392,11 @@ object Extensions {
           bigramsExpr.as("bgs"))
         .persist()
       docs.count()
-      def side(train: Boolean) = bandTableArr(
+      def side(train: Boolean) = Banding.bandTableArr(
         docs.filter(if (train) col("is_train") else !col("is_train"))
           .select(col("doc_id").as("rep"), col("bgs").as("arr")), "b:")
-      val joinCond = col("a.band") === col("b.band") &&
-        (0 until BandRows).map(j => col(s"a.k$j") === col(s"b.k$j"))
-          .reduce(_ && _)
-      val cand = side(train = true).as("a")
-        .join(side(train = false).as("b"), joinCond)
-        .select(col("a.rep").as("train_id"), col("b.rep").as("test_id"))
-        .distinct()
+      val cand = Banding.crossPairs(side(train = true), side(train = false),
+          ("train_id", "test_id"))
         .persist()
       cand.count()
       def candBgs(idCol: String, bgsCol: String) = docs
@@ -3597,17 +3412,7 @@ object Extensions {
         .filter(col("jac") >= LeakThreshold)
         .select(col("train_id"), col("test_id"), col("jac")))
     },
-    Some {
-      val mhCols = (0 until NumMinhash).map { i =>
-        s"MIN((h * ${mhA(i)} + ${mhB(i)}) % $Mod32) AS mh$i"
-      }.mkString(", ")
-      def bandSelects(src: String) = (0 until NumBands).map { b =>
-        val ks = (0 until BandRows)
-          .map(j => s"mh${BandRows * b + j} AS k$j").mkString(", ")
-        s"SELECT rep, $b AS band, $ks FROM $src"
-      }.mkString(" UNION ALL ")
-      val joinKeys = "a.band = b.band AND " +
-        (0 until BandRows).map(j => s"a.k$j = b.k$j").mkString(" AND ")
+    Some(
       s"""WITH sp AS (
              SELECT doc_id, string_split(text, ' ') AS tk,
                     ${duckHex32("md5(text)")} % 10 < 8 AS is_train
@@ -3617,13 +3422,13 @@ object Extensions {
            bg_toks AS (SELECT doc_id, is_train, unnest(bgs) AS tok FROM dbg),
            th AS (SELECT doc_id AS rep, is_train,
                     ${duckHex32("md5('b:' || tok)")} AS h FROM bg_toks),
-           tmh AS (SELECT rep, $mhCols FROM th WHERE is_train GROUP BY rep),
-           emh AS (SELECT rep, $mhCols FROM th WHERE NOT is_train GROUP BY rep),
-           tband AS (${bandSelects("tmh")}),
-           eband AS (${bandSelects("emh")}),
+           tmh AS (SELECT rep, ${Banding.duckMinhashCols} FROM th WHERE is_train GROUP BY rep),
+           emh AS (SELECT rep, ${Banding.duckMinhashCols} FROM th WHERE NOT is_train GROUP BY rep),
+           tband AS (${Banding.duckMinhashBands("tmh")}),
+           eband AS (${Banding.duckMinhashBands("emh")}),
            cand AS (
              SELECT DISTINCT a.rep AS train_id, b.rep AS test_id
-             FROM tband a JOIN eband b ON $joinKeys)
+             FROM tband a JOIN eband b ON ${Banding.duckBandJoin("a", "b")})
           SELECT c.train_id, c.test_id,
             CAST(len(list_intersect(t.bgs, e.bgs)) AS DOUBLE) /
               (len(t.bgs) + len(e.bgs) - len(list_intersect(t.bgs, e.bgs))) AS jac
@@ -3632,8 +3437,7 @@ object Extensions {
           JOIN dbg e ON e.doc_id = c.test_id
           WHERE CAST(len(list_intersect(t.bgs, e.bgs)) AS DOUBLE) /
               (len(t.bgs) + len(e.bgs) - len(list_intersect(t.bgs, e.bgs))) >= $LeakThreshold
-          ORDER BY 1,2,3"""
-    })
+          ORDER BY 1,2,3"""))
 
   // ---------------------------------------------------------------- x56
   // PageRank over the span-sharing document graph — the canonical
@@ -4599,9 +4403,9 @@ object Extensions {
           graft.functions.MinHashArr.minhashArr(col("arr"), "t:").as("mhs"))
         .filter(col("mhs").isNotNull)
         .persist() // band table + both calibration sides consume it
-      val banded = bandsOf(repTab.select(col("rep"), col("mhs"))).persist()
+      val banded = Banding.bandsOf(repTab.select(col("rep"), col("mhs"))).persist()
       banded.count() // self-join sides; also materializes repTab
-      val cand = lshCandidates(banded)
+      val cand = Banding.selfPairs(banded)
         .filter(hex32(md5(concat_ws(":", col("rep_a"), col("rep_b"))))
           % CalSampleMod === 0)
         .persist()
@@ -4647,7 +4451,7 @@ object Extensions {
     "x73_lsh_calibration",
     (s, d) => lshCalibration(s, d),
     Some {
-      val matchSum = (0 until NumMinhash)
+      val matchSum = (0 until Banding.NumMinhash)
         .map(i => s"CASE WHEN a.mh$i = b.mh$i THEN 1 ELSE 0 END")
         .mkString(" + ")
       s"""WITH $duckMasksCte, $duckMinhashCtes,
@@ -6666,16 +6470,12 @@ object Extensions {
       .select(col("doc_id"), col("sig"))
     val batC = bat.withColumn("sig", sigOf).select(col("sig"), col("arr"))
       .dropDuplicates("sig").persist()
-    val regB = bandTableArr(regC.select(col("sig").as("rep"), col("arr")), "t:")
-    val batB = bandTableArr(batC.select(col("sig").as("rep"), col("arr")), "t:")
-    val joinCond = col("a.band") === col("b.band") &&
-      (0 until BandRows).map(j => col(s"a.k$j") === col(s"b.k$j")).reduce(_ && _)
+    val regB = Banding.bandTableArr(regC.select(col("sig").as("rep"), col("arr")), "t:")
+    val batB = Banding.bandTableArr(batC.select(col("sig").as("rep"), col("arr")), "t:")
     // identical token sets agree on every band, so exact-duplicate
     // registry classes are candidates of the batch class by
     // construction — no same-sig special case needed
-    val cand = batB.as("a").join(regB.as("b"), joinCond)
-      .select(col("a.rep").as("bsig"), col("b.rep").as("rsig"))
-      .distinct().persist()
+    val cand = Banding.crossPairs(batB, regB, ("bsig", "rsig")).persist()
     // Verify sides restrict to classes that appear in a candidate
     // pair (x04's candidate-semi-join pattern). An UNCONDITIONAL
     // broadcast hint here is a scale bug: the batch side is
@@ -6736,17 +6536,7 @@ object Extensions {
     * appended-registry path (classesOf(day0) + appendRegistry(day1)
     * is exactly classesOf(day0 ∪ day1) — the equality X95RegistrySpec
     * pins at DataFrame level), so one SQL text serves both gates. */
-  private lazy val ingestOracleSql: String = {
-      val mhCols = (0 until NumMinhash).map { i =>
-        s"MIN((h * ${mhA(i)} + ${mhB(i)}) % $Mod32) AS mh$i"
-      }.mkString(", ")
-      val bandSelects = (0 until NumBands).map { b =>
-        val ks = (0 until BandRows)
-          .map(j => s"mh${BandRows * b + j} AS k$j").mkString(", ")
-        s"SELECT doc_id, $b AS band, $ks FROM mh"
-      }.mkString(" UNION ALL ")
-      val joinKeys = "a.band = b.band AND " +
-        (0 until BandRows).map(j => s"a.k$j = b.k$j").mkString(" AND ")
+  private lazy val ingestOracleSql: String =
       s"""WITH arrs AS (
             SELECT doc_id,
                    list_sort(list_distinct(string_split(text, ' '))) AS arr
@@ -6755,13 +6545,13 @@ object Extensions {
             SELECT doc_id, unnest(arr) AS tok FROM arrs),
           th AS (
             SELECT doc_id, ${duckHex32("md5('t:' || tok)")} AS h FROM toks),
-          mh AS (SELECT doc_id, $mhCols FROM th GROUP BY doc_id),
-          banded AS ($bandSelects),
+          mh AS (SELECT doc_id, ${Banding.duckMinhashCols} FROM th GROUP BY doc_id),
+          banded AS (${Banding.duckMinhashBands("mh", id = "doc_id")}),
           regb AS (SELECT * FROM banded WHERE doc_id % 4 != 0),
           batb AS (SELECT * FROM banded WHERE doc_id % 4 = 0),
           cand AS (
             SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS reg_id
-            FROM batb a JOIN regb b ON $joinKeys),
+            FROM batb a JOIN regb b ON ${Banding.duckBandJoin("a", "b")}),
           scored AS (
             SELECT c.new_id, c.reg_id,
               CAST(len(list_intersect(aa.arr, ba.arr)) AS BIGINT) AS inter,
@@ -6791,7 +6581,6 @@ object Extensions {
         LEFT JOIN summary s ON s.new_id = b.doc_id
         LEFT JOIN best bb ON bb.new_id = b.doc_id
         ORDER BY 1,2,3,4,5"""
-  }
 
   private val x86 = GateQuery(
     "x86_incremental_ingest",

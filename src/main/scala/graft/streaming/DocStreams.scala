@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Banding
 import graft.queries.Extensions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -434,7 +435,7 @@ object DocStreams {
       .withColumn("bmhs",
         graft.functions.MinHashArr.minhashArr(col("bgs_b"), "b:"))
       .filter(col("bmhs").isNotNull)
-      .withColumn("bkeys_b", Extensions.bandKeysOf(col("bmhs")))
+      .withColumn("bkeys_b", Banding.bandKeysOf(col("bmhs")))
       .select(col("bench_id"), col("bgs_b"), col("bkeys_b"),
         explode(col("bkeys_b")).as("bkey"))
 
@@ -456,7 +457,7 @@ object DocStreams {
       .withColumn("mhs",
         graft.functions.MinHashArr.minhashArr(col("bgs"), "b:"))
       .filter(col("mhs").isNotNull)
-      .withColumn("dkeys", Extensions.bandKeysOf(col("mhs")))
+      .withColumn("dkeys", Banding.bandKeysOf(col("mhs")))
       .select(col("doc_id"), col("bgs"), col("dkeys"),
         posexplode(col("dkeys")).as(Seq("band", "bkey")))
     val inter = size(array_intersect(col("bgs"), col("bgs_b")))

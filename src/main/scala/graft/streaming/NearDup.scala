@@ -66,7 +66,7 @@ object NearDup {
       .withColumn("mhs", graft.functions.MinHashArr.minhashArr(
         graft.ops.Cols.tokenSet(col("text")), "t:"))
       .withColumn("mask", Extensions.maskExpr)
-      .select(explode(Extensions.bandKeysOf(col("mhs"))).as("band_key"),
+      .select(explode(graft.ops.Banding.bandKeysOf(col("mhs"))).as("band_key"),
         col("doc_id"), col("mask"), col("ts"))
       .withWatermark("ts", horizon)
       .as[BandDoc]

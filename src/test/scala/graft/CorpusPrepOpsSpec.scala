@@ -238,7 +238,7 @@ class CorpusPrepOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("srpCandidates: hot band buckets above the cap are dropped whole") {
+  test("selfPairs on (band, bv): hot band buckets above the cap are dropped whole") {
     // five identical vectors land in ONE bucket per band; cap 3 drops
     // every bucket, so no candidates survive — while a cap of 5 (or
     // the unlimited default) admits all 10 ordered pairs
@@ -248,8 +248,10 @@ class CorpusPrepOpsSpec extends AnyFunSuite {
       .select(col("vec_id"),
         posexplode(graft.functions.SrpBands.srpBands(col("embedding")))
           .as(Seq("band", "bv")))
-    val capped = Extensions.srpCandidates(banded, maxBucket = 3).count()
-    val open = Extensions.srpCandidates(banded).count()
+    def pairs(maxBucket: Int) = graft.ops.Banding.selfPairs(banded, ("id_a", "id_b"),
+      id = "vec_id", keys = graft.ops.Banding.ValueKeys, maxBucket = maxBucket).count()
+    val capped = pairs(3)
+    val open = pairs(Int.MaxValue)
     assert(capped == 0, s"capped bucket emitted $capped pairs")
     assert(open == 10, s"uncapped should emit C(5,2)=10 pairs, got $open")
   }

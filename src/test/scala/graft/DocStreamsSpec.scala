@@ -273,7 +273,7 @@ class DocStreamsSpec extends AnyFunSuite {
       .select(col("doc_id"), graft.queries.Extensions.bigramsExpr.as("bgs"))
       .withColumn("mhs",
         graft.functions.MinHashArr.minhashArr(col("bgs"), "b:"))
-      .withColumn("dkeys", graft.queries.Extensions.bandKeysOf(col("mhs")))
+      .withColumn("dkeys", graft.ops.Banding.bandKeysOf(col("mhs")))
     val bsig = bands.select("bench_id", "bgs_b", "bkeys_b").distinct()
     val inter = size(array_intersect(col("bgs"), col("bgs_b")))
     val jac = inter.cast("double") /

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Banding
 import graft.queries.Extensions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,7 +40,7 @@ class LshPlanSpec extends AnyFunSuite {
 
   test("candidate join has no forced broadcast and reuses the band exchange") {
     withDegradedConf {
-      val cand = Extensions.lshCandidates(Extensions.bandTable(toks, "t:"))
+      val cand = Banding.selfPairs(BandingRef.bandTable(toks, "t:"))
       val plan = cand.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastExchange"),
         s"a BroadcastExchange under threshold=-1 means a forced hint:\n$plan")
@@ -52,7 +53,7 @@ class LshPlanSpec extends AnyFunSuite {
 
   test("degraded-path plan still produces the right candidates") {
     withDegradedConf {
-      val cand = Extensions.lshCandidates(Extensions.bandTable(toks, "t:"))
+      val cand = Banding.selfPairs(BandingRef.bandTable(toks, "t:"))
         .as[(Long, Long)].collect().toSet
       // reps 1 and 2 share the exact token set → all four bands agree;
       // rep 3 shares no band with either
@@ -65,11 +66,45 @@ class LshPlanSpec extends AnyFunSuite {
     val hot = (1L to 10L).map(r => (r, 0, 10L, 11L, 12L, 13L))
     val cool = Seq((20L, 1, 1L, 2L, 3L, 4L), (21L, 1, 1L, 2L, 3L, 4L))
     val banded = (hot ++ cool).toDF("rep", "band", "k0", "k1", "k2", "k3")
-    val capped = Extensions.lshCandidates(banded, maxBucket = 5)
+    val capped = Banding.selfPairs(banded, maxBucket = 5)
       .as[(Long, Long)].collect().toSet
     assert(capped == Set((20L, 21L)))
-    val uncapped = Extensions.lshCandidates(banded).count()
+    val uncapped = Banding.selfPairs(banded).count()
     assert(uncapped == 45 + 1)
+  }
+
+  test("crossPairs emits each left x right band agreement once, never a same-side pair") {
+    // (id, band, k0..k3). 1 and 101 agree in bands 0 AND 1; 2 and 102
+    // agree in none (102's band 1 carries 2's band-0 keys: the band
+    // number is part of the bucket); 3/4 and 103/104 share a bucket
+    // within their own side only
+    val left = Seq(
+      (1L, 0, 1L, 2L, 3L, 4L), (1L, 1, 5L, 6L, 7L, 8L), (1L, 2, 9L, 9L, 9L, 9L),
+      (2L, 0, 20L, 20L, 20L, 20L), (2L, 1, 21L, 21L, 21L, 21L),
+      (3L, 0, 30L, 30L, 30L, 30L), (3L, 3, 77L, 77L, 77L, 77L),
+      (4L, 0, 40L, 40L, 40L, 40L), (4L, 3, 77L, 77L, 77L, 77L))
+    val right = Seq(
+      (101L, 0, 1L, 2L, 3L, 4L), (101L, 1, 5L, 6L, 7L, 8L), (101L, 2, 99L, 9L, 9L, 9L),
+      (102L, 0, 20L, 20L, 20L, 21L), (102L, 1, 20L, 20L, 20L, 20L),
+      (103L, 3, 88L, 88L, 88L, 88L), (104L, 3, 88L, 88L, 88L, 88L))
+    def df(rows: Seq[(Long, Int, Long, Long, Long, Long)]) =
+      rows.toDF("rep", "band", "k0", "k1", "k2", "k3")
+    val got = Banding.crossPairs(df(left), df(right), ("l", "r"))
+      .as[(Long, Long)].collect()
+    // brute force: a pair is a candidate iff some (band, k0..k3) bucket
+    // holds both
+    def buckets(rows: Seq[(Long, Int, Long, Long, Long, Long)]) =
+      rows.groupBy(_._1).toSeq.map { case (id, rs) =>
+        id -> rs.map(r => (r._2, r._3, r._4, r._5, r._6)).toSet }
+    val truth = for {
+      (l, lb) <- buckets(left); (r, rb) <- buckets(right)
+      if (lb intersect rb).nonEmpty
+    } yield (l, r)
+    assert(truth.toSet == Set((1L, 101L)))
+    assert(got.toSeq.sorted == truth.toSeq.sorted,
+      s"each agreeing pair exactly once: got ${got.mkString(",")}")
+    assert(!got.exists { case (l, r) => l > 100L || r < 100L },
+      "a pair from one side's shared bucket")
   }
 
   test("x03/x22 pair generation is an equi-join, never a nested-loop cross product") {
@@ -176,7 +211,7 @@ class LshPlanSpec extends AnyFunSuite {
     // default threshold (10 MB) + tiny table: the planner MAY pick a
     // broadcast join — the point is the choice is the OPTIMIZER's
     // (size-gated), not hard-coded. Candidates must be identical.
-    val cand = Extensions.lshCandidates(Extensions.bandTable(toks, "t:"))
+    val cand = Banding.selfPairs(BandingRef.bandTable(toks, "t:"))
       .as[(Long, Long)].collect().toSet
     assert(cand == Set((1L, 2L)))
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.MinHashArr
-import graft.ops.Cols
+import graft.ops.{Banding, Cols}
 import graft.queries.Extensions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,10 +14,10 @@ class MinHashArrSpec extends AnyFunSuite {
 
   test("band tables agree with the aggregate path on real token sets") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(200)
-    val viaAgg = Extensions.bandTable(
+    val viaAgg = BandingRef.bandTable(
       docs.select(col("doc_id").as("rep"),
         explode(Cols.tokenSet(col("text"))).as("tok")), "t:")
-    val viaArr = Extensions.bandTableArr(
+    val viaArr = Banding.bandTableArr(
       docs.select(col("doc_id").as("rep"),
         Cols.tokenSet(col("text")).as("arr")), "t:")
     assert(viaArr.exceptAll(viaAgg).isEmpty && viaAgg.exceptAll(viaArr).isEmpty)
@@ -30,9 +30,9 @@ class MinHashArrSpec extends AnyFunSuite {
       (3L, "x y x y")
     ).toDF("rep", "text")
     val withBgs = docs.select(col("rep"), Extensions.bigramsExpr.as("bgs"))
-    val viaAgg = Extensions.bandTable(
+    val viaAgg = BandingRef.bandTable(
       withBgs.select(col("rep"), explode(col("bgs")).as("tok")), "b:")
-    val viaArr = Extensions.bandTableArr(
+    val viaArr = Banding.bandTableArr(
       withBgs.select(col("rep"), col("bgs").as("arr")), "b:")
     assert(viaArr.exceptAll(viaAgg).isEmpty && viaAgg.exceptAll(viaArr).isEmpty)
     assert(!viaArr.select("rep").as[Long].collect().contains(2L))

@@ -74,14 +74,14 @@ class RegistryStoreSpec extends AnyFunSuite {
       .getOrElse(fail("no file scan in the probe plan"))
     val selected = scan.selectedPartitions
     val allParts = RegistryStore.bandDirs(spark, root)
-    assert(allParts.size == graft.queries.Extensions.NumBands)
+    assert(allParts.size == graft.ops.Banding.NumBands)
     assert(selected.partitionCount == 1,
       s"partition pruning must select 1 of ${allParts.size} partitions, " +
         s"got ${selected.partitionCount}")
     assert(selected.toPartitionArray.forall(
       _.filePath.toString.contains("band=2")))
     // lossless: the pruned scan returns exactly band 2's rows
-    val want = graft.queries.Extensions
+    val want = graft.ops.Banding
       .bandTableArr(graft.queries.Extensions.classesOf(docArrs)
         .select(col("sig").as("rep"), col("arr")), "t:")
       .filter(col("band") === 2).count()
