@@ -23,7 +23,4 @@ object GateQuery {
     import org.apache.spark.sql.functions.col
     df.orderBy(df.columns.toIndexedSeq.map(col): _*)
   }
-
-  /** `ORDER BY 1,2,…,n` suffix for the oracle side. */
-  def orderByAll(n: Int): String = "ORDER BY " + (1 to n).mkString(",")
 }

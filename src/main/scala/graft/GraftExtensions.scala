@@ -3,19 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.functions.{FreqCandidatesAgg, GramHashes, LongCosine, MinHashAgg, MinHashArr, NfcNormalize, PqAdc, PqEncode, QuantizedCosine, SimHashAgg, SimHashArr, SpanHashes, SrpBands, TokenBigrams, TokenMask, TokenSetSig, ZValue}
+import graft.functions.{FreqCandidatesAgg, GramHashes, LongCosine, MinHashAgg, MinHashArr, NfcNormalize, PqAdc, PqEncode, QuantizedCosine, SimHashArr, SpanHashes, SrpBands, TokenBigrams, TokenMask, TokenSetSig, ZValue}
 
-/** SparkSessionExtensions entry point: makes graft's native
-  * expressions available in any session via configuration —
-  * {{{ spark.sql.extensions=graft.GraftExtensions }}} —
-  * the standard deployment route for cluster-wide custom functions
+/** SparkSessionExtensions entry point: the one place graft's native
+  * expressions become SQL functions. [[Sessions.tune]] installs it
+  * through the static conf
+  * {{{ spark.sql.extensions=graft.GraftExtensions }}}
+  * — the standard deployment route for cluster-wide custom functions
   * (no code changes in user jobs; `SELECT quantized_cosine(a, b)`
-  * and `SELECT minhash_agg(h) ... GROUP BY ...` just resolve).
-  *
-  * EVERY graft native is injected here — the per-object
-  * `register(spark)` helpers cover ad-hoc sessions, but the extension
-  * is the single source of truth for what SQL resolves, so the
-  * surface cannot depend on which helper a session happened to call.
+  * and `SELECT minhash_agg(h) ... GROUP BY ...` just resolve) — so
+  * every session a graft harness builds resolves every name below.
+  * The conf is static: it takes effect on the builder that creates
+  * the JVM's SparkContext, and every session on that context.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -27,9 +26,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       builder))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // optimizer rule: keyless numeric range joins → bucketed
-    // equi-joins, opt-in via spark.graft.rangeJoin.binSize
-    ext.injectOptimizerRule(_ => new graft.plans.RangeJoinRule)
     inject(ext, "quantized_cosine", classOf[QuantizedCosine],
       exprs => QuantizedCosine(exprs(0), exprs(1)))
     inject(ext, "long_cosine", classOf[LongCosine],
@@ -38,8 +34,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // analyzer wraps it in an AggregateExpression
     inject(ext, "minhash_agg", classOf[MinHashAgg],
       exprs => MinHashAgg(exprs.head))
-    inject(ext, "simhash_agg", classOf[SimHashAgg],
-      exprs => SimHashAgg(exprs.head))
     // freq_candidates(tok[, k-literal]) — Misra-Gries heavy-hitter
     // candidate summary, k counters (default 100)
     inject(ext, "freq_candidates", classOf[FreqCandidatesAgg], {

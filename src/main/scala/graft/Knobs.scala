@@ -9,8 +9,8 @@ package graft
   * from its replayed oracle), so no knob here has a `spark.graft.*`
   * key. The two winnows are explicit library parameters: a caller
   * wanting another setting passes it there. The two caps are fixed
-  * constants. The one settable key, the range-join bin size, changes
-  * a plan, never a result. KnobsSpec pins the defaults.
+  * constants. No knob is settable by conf. KnobsSpec pins the
+  * defaults.
   *
   * | knob | where it binds | default | contract |
   * |---|---|---|---|
@@ -19,7 +19,6 @@ package graft
   * | Fingerprint band cap | (constant [[FpBandCapDefault]]) | 64 | two-stage bucket cap on perceptual-hash band joins (x90/x91/x93): buckets above the cap sub-split by the next band — LOSSLESS for Hamming ≤ threshold matches (pigeonhole over the sub-bands), bounds the per-bucket pair fan-out |
   * | Ingest broadcast class cap | (constant [[IngestBcastClassCapDefault]]) | 100000 | x86 incremental-ingest: registry classes ≤ cap broadcast (measured, not hinted); above it the probe falls back to a shuffle equi-join — pure execution-strategy switch, result identical |
   * | IVF-PQ re-rank depth R | (constant [[queries.Extensions.IvfPqRerankFixed]]) | 8·k | ADC short-list depth re-ranked exactly; recall floor proven by the x98 gate + X80IvfPqSpec on clustered data. `corpusScaledR = true` is the FIXTURE-ONLY escape hatch for isotropic-noise corpora (x80/x66/x83 gates), never the production default |
-  * | Range-join bin size | `spark.graft.rangeJoin.binSize` | off | opt-in Catalyst rewrite of inequality range joins into bucketed equi-joins ([[plans.RangeJoinRule]]); result-identical, plan-level only |
   * | Streaming state partitions | (derived, [[streamStateParts]]) | max(⌈√(state_rows/4096)⌉, ⌈√(trigger_rows/1024)⌉), clamped [1, cores] | stateful-query shuffle partitions sized to the query's own STATE + TRIGGER volumes, never core count — see the rule's scaladoc |
   *
   * Derived (not settable) scale parameters, for completeness: IVF /

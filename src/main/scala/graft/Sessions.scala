@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session configuration shared by Verify, Bench, PlanDump, StreamingBench
-  * and the tests.
+/** The one session builder: configuration shared by Verify, Bench,
+  * PlanDump, StreamingBench, the tests and perfbench.
   *
   * These mirror what a production deployment would set cluster-wide:
   * UTC session time (oracle + Flink-epoch window parity), AQE on
@@ -20,6 +20,13 @@ import org.apache.spark.sql.SparkSession
   * parquet write and commit, and file listing. Hadoop caches `file:`
   * JVM-wide on first use, so a process must not fetch it before its
   * first session is built.
+  *
+  * [[GraftExtensions]] is installed through the static conf
+  * `spark.sql.extensions`, so every graft native resolves by name in
+  * SQL (`SELECT z_value(x, y)`) in every session built here. It
+  * registers functions only and adds no optimizer rule, so it
+  * changes no DataFrame plan. Like any static conf it is honored by
+  * the builder that creates the SparkContext.
   */
 object Sessions {
 
@@ -58,6 +65,7 @@ object Sessions {
       .config("spark.driver.host", "127.0.0.1")
       .config("spark.hadoop.fs.file.impl", classOf[graft.fs.NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.fs.NioLocalFs].getName)
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
     sys.env.get("SPARK_GRAFT_STATE_STORE")
       .flatMap(f => stateStoreProviders.get(f.toLowerCase))
       .fold(base)(cls =>

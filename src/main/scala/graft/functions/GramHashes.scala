@@ -120,10 +120,6 @@ object GramHashes {
   def gramHashes(text: Column, nMin: Int, nMax: Int): Column =
     GraftBridge.column(GramHashes(GraftBridge.expression(text), nMin, nMax))
 
-  /** SQL registration: `SELECT gram_hashes(text, 2, 10)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "gram_hashes", builder)
-
   private[graft] def builder: Seq[Expression] => Expression = {
     // any FOLDABLE integral expression works (the span_hashes rule)
     def intArg(e: Expression, what: String): Int = {

@@ -78,9 +78,4 @@ object LongCosine {
   def longCosine(a: Column, b: Column): Column =
     GraftBridge.column(LongCosine(
       GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** Ad-hoc SQL registration (the extension injects it too). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "long_cosine",
-      exprs => LongCosine(exprs(0), exprs(1)))
 }

@@ -64,10 +64,6 @@ object NfcNormalize {
   def nfcNormalize(text: Column): Column =
     GraftBridge.column(NfcNormalize(GraftBridge.expression(text)))
 
-  /** SQL registration: `SELECT nfc_normalize(text)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "nfc_normalize", builder)
-
   private[graft] def builder: Seq[Expression] => Expression = {
     case Seq(text) => NfcNormalize(text)
     case exprs => throw new IllegalArgumentException(

@@ -82,9 +82,4 @@ object QuantizedCosine {
   def quantizedCosine(a: Column, b: Column): Column =
     GraftBridge.column(
       QuantizedCosine(GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** SQL registration: `SELECT quantized_cosine(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "quantized_cosine",
-      exprs => QuantizedCosine(exprs(0), exprs(1)))
 }

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 /** The 32-bit SimHash of a token array, fused into one native per-ROW
   * expression: for each element, md5 digest → 32-bit base hash, vote
   * ±1 per bit, signature bit set where the tally is non-negative —
-  * the identical arithmetic as the grouped [[SimHashAgg]] path
-  * (SimHashArrSpec pins equality), but computed as a projection: no
+  * the identical arithmetic as the grouped 32-column `sum(when)`
+  * aggregate the oracle replays (SimHashArrSpec pins equality), but
+  * computed as a projection: no
   * explode, no aggregation shuffle. Same null contract as
   * [[MinHashArr]]: an empty array yields NULL, replicating the
   * aggregate path's absent rows.
@@ -94,9 +95,4 @@ object SimHashArr {
   /** Column-API face of the expression. */
   def simhashArr(arr: Column): Column =
     GraftBridge.column(SimHashArr(GraftBridge.expression(arr)))
-
-  /** SQL registration: `SELECT simhash_arr(tokens)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "simhash_arr",
-      exprs => SimHashArr(exprs(0)))
 }

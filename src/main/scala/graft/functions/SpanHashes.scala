@@ -125,10 +125,6 @@ object SpanHashes {
   def spanHashes(text: Column, w: Int, winnow: Int = 1): Column =
     GraftBridge.column(SpanHashes(GraftBridge.expression(text), w, winnow))
 
-  /** SQL registration: `SELECT span_hashes(text, 8, 1)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "span_hashes", builder)
-
   private[graft] def builder: Seq[Expression] => Expression = {
     // any FOLDABLE integral expression works as a width/winnow arg:
     // SQL integer literals arrive as IntegerType, but 8L is a BIGINT

@@ -136,9 +136,4 @@ object SrpBands {
   /** Column-API face of the expression. */
   def srpBands(v: Column): Column =
     GraftBridge.column(SrpBands(GraftBridge.expression(v)))
-
-  /** SQL registration: `SELECT srp_bands(embedding)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "srp_bands",
-      exprs => SrpBands(exprs(0)))
 }

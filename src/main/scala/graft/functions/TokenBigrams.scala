@@ -71,9 +71,4 @@ object TokenBigrams {
   /** Column-API face of the expression. */
   def tokenBigrams(text: Column): Column =
     GraftBridge.column(TokenBigrams(GraftBridge.expression(text)))
-
-  /** SQL registration: `SELECT token_bigrams(text)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "token_bigrams",
-      exprs => TokenBigrams(exprs(0)))
 }

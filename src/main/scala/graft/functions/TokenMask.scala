@@ -66,9 +66,4 @@ object TokenMask {
   /** Column-API face of the expression. */
   def tokenMask(text: Column): Column =
     GraftBridge.column(TokenMask(GraftBridge.expression(text)))
-
-  /** SQL registration: `SELECT token_mask(text)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "token_mask",
-      exprs => TokenMask(exprs(0)))
 }

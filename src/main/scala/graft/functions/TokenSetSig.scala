@@ -71,9 +71,4 @@ object TokenSetSig {
   /** Column-API face of the expression. */
   def tokenSetSig(text: Column): Column =
     GraftBridge.column(TokenSetSig(GraftBridge.expression(text)))
-
-  /** SQL registration: `SELECT token_set_sig(text)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "token_set_sig",
-      exprs => TokenSetSig(exprs(0)))
 }

@@ -65,9 +65,4 @@ object ZValue {
   /** Column-API face of the expression. */
   def zValue(x: Column, y: Column): Column =
     GraftBridge.column(ZValue(GraftBridge.expression(x), GraftBridge.expression(y)))
-
-  /** SQL registration: `SELECT z_value(x, y)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "z_value",
-      exprs => ZValue(exprs(0), exprs(1)))
 }

@@ -50,11 +50,15 @@ import org.apache.spark.sql.functions._
   * action — it computes the round's plan once, the localCheckpoint
   * mark persists the blocks as a side effect of that same job, and
   * the next round's joins read the cached blocks. One Spark job per
-  * round instead of two. (An accumulator-fused variant that pushes
+  * round instead of two. Every round is counted: under AQE a lazy
+  * checkpoint's map stages run when it is declared and only its last
+  * stage is deferred, so an uncounted round's blocks were computed
+  * by both of the next round's readers at once (BlockManager's
+  * "already exists" warning). An accumulator-fused variant that pushes
   * the count into an RDD map was measured SLOWER — re-rooting
   * through RDD[Row] costs conversions and codegen: PERF.md
   * "Round-6: measured fixes…", CcAbProbe added in 119ae52, since
-  * deleted — so the count stays a DataFrame action.)
+  * deleted — so the count stays a DataFrame action.
   */
 object ConnectedComponents {
 
@@ -69,21 +73,6 @@ object ConnectedComponents {
     *              round. Identical fixpoint
     *              (CorpusPrepOpsSpec pins both against union-find);
     *              see the A/B note below for which wins where.
-    * @param checkEvery rounds between convergence COUNTS. The count
-    *              is the loop's only per-round action, and at local
-    *              scale its fixed job overhead dominates late rounds
-    *              (the data converged rounds ago); checking every k
-    *              rounds chains k rounds' plans into ONE job —
-    *              logical plans stay truncated (localCheckpoint
-    *              rewrites to a LogicalRDD immediately, materialized
-    *              or not), so the k-round plan grows only 2^k over
-    *              one round's, bounded for small k. Cost: up to k−1
-    *              extra (empty-frontier, cheap) rounds past the
-    *              fixpoint. Identical result for any k
-    *              (CorpusPrepOpsSpec pins k=1 vs default vs 3 against
-    *              union-find); PERF.md "Round-8: span-cap substrate,
-    *              CC action cadence…" measures the win (CcAbProbe's
-    *              check2 row; probe added in 119ae52, since deleted).
     * @param jumpAfter rounds before POINTER JUMPING kicks in. The
     *              jump (lbl ← lbl[lbl], a mins self-join) doubles
     *              propagation distance per round — the O(log
@@ -105,8 +94,7 @@ object ConnectedComponents {
     * @return (id, component) — component = min node id reachable */
   def label(nodes: DataFrame, edges: DataFrame,
             maxRounds: Int = 50, delta: Boolean = true,
-            jumpAfter: Int = 8, checkEvery: Int = 2): DataFrame = {
-    require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
+            jumpAfter: Int = 8): DataFrame = {
     // symmetrize once: propagation must flow both ways along a pair.
     // Persisted PRE-PARTITIONED on the join key: every round joins
     // sym on src, and a cached unpartitioned table would re-shuffle
@@ -165,14 +153,10 @@ object ConnectedComponents {
       front = if (delta) changedRows.select(col("id"), col("lbl"))
               else labels
       round += 1
-      // convergence count every `checkEvery` rounds (or at the round
-      // cap): the ONE action, materializing every lazy checkpoint
-      // chained since the last check. Skipped rounds leave `changed`
-      // at its stale positive value — at worst k−1 empty-frontier
-      // rounds run past the fixpoint, each a no-op join over zero
-      // changed labels.
-      if (round % checkEvery == 0 || round >= maxRounds)
-        changed = changedRows.count()
+      // the round's ONE action: it fills the lazy checkpoint, so the
+      // next round's two readers of it (the labels arm and the edge
+      // frontier) read stored blocks instead of each computing them
+      changed = changedRows.count()
     }
     sym.unpersist()
     labels.select(col("id"), col("lbl").as("component"))

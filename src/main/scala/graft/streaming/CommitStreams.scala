@@ -39,17 +39,11 @@ object CommitStreams {
       .filter(col("ext").isin("java", "scala"))
       .groupBy(col("ext")).count()
 
-  /** Q4 (:103-115) running composite-key totals (update mode). */
+  /** Q4 (:103-115) running composite-key totals (update mode): the
+    * batch [[graft.queries.CommitQueries.q4]] plan itself, run on a
+    * stream — each micro-batch re-emits the changed keys' sums. */
   def runningChanges(commits: DataFrame): DataFrame =
-    commits.select(explode(col("files")).as("file"))
-      .filter(col("file.filename").endsWith(".js") ||
-              col("file.filename").endsWith(".py"))
-      .select(
-        when(col("file.filename").endsWith(".js"), ".js").otherwise(".py").as("ext"),
-        coalesce(col("file.status"), lit("unknown")).as("status"),
-        col("file.changes").as("changes"))
-      .groupBy(col("ext"), col("status"))
-      .agg(sum(col("changes")).as("changes"))
+    graft.queries.CommitQueries.q4(commits)
 
   /** Exact per-input-record emission of the Q3 running counter
     * (`(java,1)(java,2)…` per reference README) via keyed state:

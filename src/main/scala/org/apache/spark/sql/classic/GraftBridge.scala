@@ -1,20 +1,13 @@
 package org.apache.spark.sql.classic
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Minimal bridge into Spark's `private[sql]` Column/session internals
-  * for registering custom Catalyst expressions — the conventional
+/** Minimal bridge into Spark's `private[sql]` Column internals for
+  * wrapping custom Catalyst expressions as Columns — the conventional
   * pattern for Spark-native extension libraries (Spark 4 moved the
   * public `Column(expr)` constructor behind ColumnNode). */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a (name, builder) as a SQL-callable function. */
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
 }

@@ -9,9 +9,10 @@ import graft.schema.Protocol._
 import CommitFixtures._
 
 /** Streaming semantics: update-mode running counters (incremental
-  * emission across micro-batches), append-mode window firing on
-  * watermark, the stream-stream interval join, and the keyed CEP
-  * state machine with first-match consumption and timeout pruning. */
+  * emission across micro-batches, final totals equal to the batch
+  * query), append-mode window firing on watermark, the stream-stream
+  * interval join, and the keyed CEP state machine with first-match
+  * consumption and timeout pruning. */
 class CommitStreamsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -79,6 +80,61 @@ class CommitStreamsSpec extends AnyFunSuite {
       (".py", "modified", 12L), (".js", "added", 10L),
       (".py", "modified", 22L), (".py", "unknown", 3L)))
     q.stop()
+  }
+
+  test("running changes: the last update-mode row per key equals batch q4 over the whole feed") {
+    val batches = Seq(
+      Seq(commit("a", t("2019-06-26T10:00:00Z"), files = Seq(
+        file(Some("a.py"), Some("modified"), changes = 12),
+        file(Some("b.js"), Some("added"), changes = 10),
+        file(Some("c.java"), Some("modified"), changes = 7)))),
+      Seq(commit("b", t("2019-06-26T11:00:00Z"), files = Seq(
+        file(Some("d.py"), Some("modified"), changes = 10),
+        file(Some("e.py"), None, changes = 3),
+        file(None, Some("added"), changes = 5)))),
+      Seq(commit("c", t("2019-06-26T12:00:00Z"), files = Seq(
+        file(Some("f.js"), Some("added"), changes = 4)))))
+    val in = MemoryStream[Commit]
+    val (q, sink) = startQuery(CommitStreams.runningChanges(in.toDF()), OutputMode.Update)
+    batches.foreach { b => in.addData(b); q.processAllAvailable() }
+    q.stop()
+    // the memory sink appends each micro-batch's changed keys in
+    // batch order, so the last row per key is its final total
+    val last = spark.table(sink).as[(String, String, Long)].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap
+    val want = graft.queries.CommitQueries.q4(batches.flatten.toDS().toDF())
+      .as[(String, String, Long)].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap
+    assert(want == Map((".py", "modified") -> 22L, (".js", "added") -> 14L,
+      (".py", "unknown") -> 3L), s"fixture premise: $want")
+    assert(last == want)
+  }
+
+  test("sliding type counts: append mode emits exactly q6's windows the watermark has closed") {
+    val st = (n: Int) => Some(graft.schema.Protocol.Stats(n, 0, 0))
+    // time-ordered batches (zero-slack watermark: nothing is late);
+    // no 48h/12h window ends at the last event, so "closed" is exact
+    val batches = Seq(
+      Seq(commit("a", t("2019-06-24T01:00:00Z")),
+          commit("b", t("2019-06-24T13:00:00Z"), stats = st(30))),
+      Seq(commit("c", t("2019-06-25T05:00:00Z"), stats = st(5)),
+          commit("d", t("2019-06-26T10:00:00Z"), stats = st(21))),
+      Seq(commit("e", t("2019-06-27T07:00:00Z"))),
+      Seq(commit("f", t("2019-06-28T18:30:00Z"), stats = st(40))))
+    val in = MemoryStream[Commit]
+    val (q, sink) = startQuery(CommitStreams.slidingTypeCounts(in.toDF()), OutputMode.Append)
+    batches.foreach { b => in.addData(b); q.processAllAvailable() }
+    q.stop()
+    val got = spark.table(sink).as[(java.sql.Timestamp, String, Long)].collect().toSeq
+      .sortBy(r => (r._1.getTime, r._2))
+    val watermark = t("2019-06-28T18:30:00Z").getTime
+    val all = graft.queries.CommitQueries.q6(batches.flatten.toDS().toDF())
+      .as[(java.sql.Timestamp, String, Long)].collect().toSeq
+    val closed = all.filter(_._1.getTime + 48L * 3600 * 1000 <= watermark)
+      .sortBy(r => (r._1.getTime, r._2))
+    assert(closed.nonEmpty && closed.size < all.size,
+      s"fixture premise: some windows closed, some still open — $all")
+    assert(got == closed)
   }
 
   test("daily counts fire once per window when the watermark passes (append mode)") {

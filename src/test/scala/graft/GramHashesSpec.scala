@@ -46,7 +46,6 @@ class GramHashesSpec extends AnyFunSuite {
   }
 
   test("SQL registration works with literal and foldable args") {
-    GramHashes.register(spark) // TestSpark predates the extension conf
     val got = spark.sql(
       "SELECT size(gram_hashes('a b c', 2)) AS s2, " +
         "size(gram_hashes('a b c', 1, 3)) AS s13").head()

@@ -45,15 +45,7 @@ class LongCosineSpec extends AnyFunSuite {
   }
 
   test("resolves in SQL through the session extension") {
-    val shared = TestSpark.spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions().apply(_))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val r = s2.sql("SELECT long_cosine(array(1L, 0L), array(1L, 0L)) AS c")
+    val r = spark.sql("SELECT long_cosine(array(1L, 0L), array(1L, 0L)) AS c")
       .collect().head.getDouble(0)
     assert(r == 1.0)
   }

@@ -42,7 +42,6 @@ class NfcNormalizeSpec extends AnyFunSuite {
   }
 
   test("SQL registration resolves and agrees with the Column API") {
-    NfcNormalize.register(spark)
     Seq(Tuple1("Ångström")).toDF("t")
       .createOrReplaceTempView("nfc_t")
     val viaSql = spark.sql("SELECT nfc_normalize(t) FROM nfc_t")

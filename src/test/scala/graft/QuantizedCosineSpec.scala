@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.QuantizedCosine
 import graft.functions.QuantizedCosine.quantizedCosine
 
 /** The native expression must be bit-identical to the built-in
@@ -54,7 +53,6 @@ class QuantizedCosineSpec extends AnyFunSuite {
   }
 
   test("SQL registration and type check") {
-    QuantizedCosine.register(spark)
     val r = spark.sql(
       "SELECT quantized_cosine(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT))) AS c")
       .collect().head.getDouble(0)

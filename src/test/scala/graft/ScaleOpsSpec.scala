@@ -2,54 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ops.{CommitSummaryAggregator, Salt}
-import graft.queries.CommitQueries
-import CommitFixtures._
 
-/** Scale utilities: salted aggregation equals the direct groupBy on
-  * skewed data; the typed single-pass Aggregator equals the two-level
-  * Q7 rollup; approx_count_distinct lands within its error bound. */
+/** Scale utilities: approx_count_distinct lands within its error
+  * bound. */
 class ScaleOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("salted aggregation equals direct groupBy on a skewed key") {
-    // 90% of rows share one key — the aggregation-skew shape
-    val rows = (1 to 10000).map { i =>
-      (if (i % 10 == 0) s"key${i % 7}" else "hot", i.toLong, i * 1.5)
-    }.toDF("k", "id", "v")
-    val direct = rows.groupBy($"k")
-      .agg(count(lit(1)).as("cnt"), sum($"id").as("s"))
-      .as[(String, Long, Long)].collect().toSet
-    val salted = Salt.saltedAggregate(rows, Seq("k"), $"id", buckets = 8,
-        partial = Seq(count(lit(1)).as("cnt"), sum($"id").as("s")),
-        merge = Seq(sum($"cnt").as("cnt"), sum($"s").as("s")))
-      .as[(String, Long, Long)].collect().toSet
-    assert(salted == direct)
-  }
-
-  test("typed Aggregator matches the two-level q7 rollup") {
-    val day = "2019-06-26"
-    val commits = ((1 to 11).flatMap { i =>
-      Seq(commit(s"g$i", t(f"${day}T${i + 1}%02d:00:00Z"), committer = "georgios",
-            repo = "tudelft/bdp", stats = Some(Stats2(2))),
-          commit(s"j$i", t(f"${day}T${i + 1}%02d:30:00Z"), committer = "jeroen",
-            repo = "tudelft/bdp", stats = Some(Stats2(3))))
-    }).toDS()
-    val typed = commits
-      .map(c => (c.commit.committer.name, c.stats.map(_.total.toLong).getOrElse(0L)))
-      .groupByKey(_ => "tudelft/bdp")
-      .agg(CommitSummaryAggregator.agg.toColumn)
-      .collect().head._2
-    val dsl = CommitQueries.q7(commits.toDF())
-      .as[(String, String, Long, Long, Long, String)].collect().head
-    assert(typed.amountOfCommits == dsl._3)
-    assert(typed.amountOfCommitters == dsl._4)
-    assert(typed.totalChanges == dsl._5)
-    assert(typed.mostPopularCommitter == dsl._6)
-  }
-
-  private def Stats2(total: Int) = graft.schema.Protocol.Stats(total, 0, 0)
 
   test("approx_count_distinct within declared rsd of exact") {
     val e = Tables.events(spark, "/root/testdata/sf0.01")

@@ -72,7 +72,6 @@ class SpanHashesSpec extends AnyFunSuite {
   }
 
   test("SQL registration resolves and agrees with the Column API") {
-    SpanHashes.register(spark)
     Tables.documents(spark, "/root/testdata/sf0.001")
       .createOrReplaceTempView("sh_docs")
     val viaSql = spark.sql(
@@ -83,7 +82,6 @@ class SpanHashesSpec extends AnyFunSuite {
   }
 
   test("SQL args accept any foldable integral constant (8L, 4+4), reject others clearly") {
-    SpanHashes.register(spark)
     Tables.documents(spark, "/root/testdata/sf0.001")
       .createOrReplaceTempView("sh_docs2")
     val base = spark.sql(

@@ -60,7 +60,6 @@ class SrpBandsSpec extends AnyFunSuite {
   }
 
   test("SQL registration: srp_bands resolves and agrees with the Column API") {
-    SrpBands.register(spark)
     Tables.embeddings(spark, "/root/testdata/sf0.001")
       .createOrReplaceTempView("srp_emb")
     val viaSql = spark.sql(

@@ -42,7 +42,6 @@ class TokenBigramsSpec extends AnyFunSuite {
   }
 
   test("SQL registration resolves and agrees with the Column API") {
-    TokenBigrams.register(spark)
     Tables.documents(spark, "/root/testdata/sf0.001")
       .createOrReplaceTempView("tb_docs")
     val viaSql = spark.sql(
