@@ -156,22 +156,22 @@ object AnnStore {
     // prefix — on anything else the trained codebook corrupts
     // silently (see the guard's scaladoc); fail loudly instead
     E.ivfPqRequireDenseSeedPrefix(v)
-    val cents = E.ivfPqCentModel(v).persist()
-    cents.count()
-    // assignment deliberately unpersisted: a stateless per-row native
-    // encode over the (caller-persisted) input, cheaper to recompute
-    // than to cache (round-15 A/B, OPTIMIZATION_r15.md §5;
-    // LifecycleAbProbe in cdc5c1f, since deleted — caching the wide
-    // assignment output measured slower than re-encoding)
-    val assigned = E.ivfPqAssign(v, cents)
-    val rcb = E.ivfPqCodebook(assigned).persist()
-    rcb.count()
-    val g = nextGen(fs, root)
-    cents.crossJoin(rcb).write.parquet(modelDir(root, g))
-    E.ivfPqEncodeDf(assigned, rcb)
-      .select(col("vec_id"), col("codes"), col("cid"))
-      .write.partitionBy("cid").parquet(codesDir(root, g))
-    cents.unpersist(); rcb.unpersist()
+    val g = Cached.scope {
+      val cents = Cached.fill(E.ivfPqCentModel(v))
+      // assignment deliberately unpersisted: a stateless per-row native
+      // encode over the (caller-persisted) input, cheaper to recompute
+      // than to cache (round-15 A/B, OPTIMIZATION_r15.md §5;
+      // LifecycleAbProbe in cdc5c1f, since deleted — caching the wide
+      // assignment output measured slower than re-encoding)
+      val assigned = E.ivfPqAssign(v, cents)
+      val rcb = Cached.fill(E.ivfPqCodebook(assigned))
+      val g = nextGen(fs, root)
+      cents.crossJoin(rcb).write.parquet(modelDir(root, g))
+      E.ivfPqEncodeDf(assigned, rcb)
+        .select(col("vec_id"), col("codes"), col("cid"))
+        .write.partitionBy("cid").parquet(codesDir(root, g))
+      g
+    }
     commitManifest(fs, root, Manifest(prior.getOrElse(0) + 1, g, Seq(g)))
     if (prior.nonEmpty) reapStaleGens(spark, root)
   }

@@ -227,30 +227,29 @@ object Bench {
       } catch { case _: Throwable => 0L }
     val hz = 100.0 // USER_HZ: Linux fixes the /proc/stat tick at 100
     def timedPass(name: String): (Double, Boolean) = {
-      val w0 = System.nanoTime(); val c0 = osBean.getProcessCpuTime
-      val st0 = stealTicks
-      // Evaluate the FULL contracted result (noop sink): a count()
-      // action lets Catalyst prune computed columns and eliminate the
-      // output sort, so projection-shaped gates measured scan-only
-      // (x08 read 0.106 s; the round-15 per-row x96 would have read
-      // 0.016 s at sf1 — pure fiction). The noop write produces every
-      // output row as Verify's parquet write does, minus encode+IO.
-      // NOT comparable to pre-round-15 artifacts for projection gates
-      // (PERF.md documents the re-baseline).
-      try {
-        fnOf(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      } catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - w0) / 1e9
-      val cpuSec = (osBean.getProcessCpuTime - c0) / 1e9
-      val stealSec = (stealTicks - st0) / hz
+      // the gate's persisted intermediates are released when the scope
+      // ends, after the clocks are read: dead entries would otherwise
+      // pollute every later query's measurement (x19 read 10.3 s vs
+      // 4 s isolated), and releasing them is not the gate's time
+      val (dt, cpuSec, stealSec) = Cached.scope {
+        val w0 = System.nanoTime(); val c0 = osBean.getProcessCpuTime
+        val st0 = stealTicks
+        // Evaluate the FULL contracted result (noop sink): a count()
+        // action lets Catalyst prune computed columns and eliminate the
+        // output sort, so projection-shaped gates measured scan-only
+        // (x08 read 0.106 s; the round-15 per-row x96 would have read
+        // 0.016 s at sf1 — pure fiction). The noop write produces every
+        // output row as Verify's parquet write does, minus encode+IO.
+        // NOT comparable to pre-round-15 artifacts for projection gates
+        // (PERF.md documents the re-baseline).
+        try {
+          fnOf(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        } catch { case _: Throwable => () }
+        ((System.nanoTime() - w0) / 1e9,
+          (osBean.getProcessCpuTime - c0) / 1e9, (stealTicks - st0) / hz)
+      }
       val starved = dt > 0.5 &&
         (cpuSec < dt * 0.5 || stealSec > dt * 0.25)
-      // the dedup queries persist() intermediates they never
-      // unpersist (the returned plan still references them); once
-      // this pass's count() is done the entries are dead weight —
-      // dropping them keeps storage memory from polluting every
-      // later query's measurement (x19 read 10.3s vs 4s isolated)
-      spark.catalog.clearCache()
       (dt, starved)
     }
     val m = measure(names.map(_._1), timedPass, reps, budgetSec,

@@ -634,49 +634,44 @@ object RegistryStore {
   private def stageGeneration(classes: DataFrame, root: String, g: Int,
                               filesPerBand: Int): Unit = {
     val spark = classes.sparkSession
-    val staged = classes
-      .select(col("sig"), col("cnt"), col("min_id"), col("arr")).persist()
-    try {
-      // materialize the staged input ONCE before anything consumes it
-      // concurrently (racing consumers would each recompute the
-      // corpus-scale classesOf aggregation while the cache fills)
-      staged.count()
-      val bt = graft.ops.Banding
+    Cached.scope {
+      // filled ONCE before the two sinks read it concurrently: each
+      // recompute would be the corpus-scale classesOf aggregation
+      val staged = Cached.fill(
+        classes.select(col("sig"), col("cnt"), col("min_id"), col("arr")))
+      val bt = Cached.keep(graft.ops.Banding
         .bandTableArr(staged.select(col("sig").as("rep"), col("arr")), "t:")
-        .withColumnRenamed("rep", "sig")
-        .persist()
+        .withColumnRenamed("rep", "sig"))
+      // The classes parquet write and the band-index write are
+      // independent sinks over the materialized staged input —
+      // submit them concurrently so the classes write (a cache
+      // read + encode + IO pass) back-fills the band side's
+      // sampling/shuffle tail (guide §2.6, the compact-fold move).
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutor(pool)
       try {
-        // The classes parquet write and the band-index write are
-        // independent sinks over the materialized staged input —
-        // submit them concurrently so the classes write (a cache
-        // read + encode + IO pass) back-fills the band side's
-        // sampling/shuffle tail (guide §2.6, the compact-fold move).
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        try {
-          val cF = scala.concurrent.Future {
-            spark.sparkContext.setJobDescription(s"stage classes g=$g")
-            staged.write.parquet(classesDir(root, g))
-          }
-          val bF = scala.concurrent.Future {
-            spark.sparkContext.setJobDescription(s"stage bands g=$g")
-            bt.repartitionByRange(
-                graft.ops.Banding.NumBands * filesPerBand,
-                col("band"), col("k0"))
-              .sortWithinPartitions(col("band"), col("k0"))
-              .write.partitionBy("band").parquet(bandsDir(root, g))
-          }
-          // settle BOTH sinks before propagating any failure (no
-          // write may be left in flight when the exception surfaces),
-          // under a generous bound instead of Duration.Inf
-          val settled = scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(
-              Seq(cF, bF).map(_.transform(scala.util.Success(_)))),
-            FoldTimeout)
-          settled.foreach(_.get)
-        } finally drain(pool, root)
-      } finally bt.unpersist()
-    } finally staged.unpersist()
+        val cF = scala.concurrent.Future {
+          spark.sparkContext.setJobDescription(s"stage classes g=$g")
+          staged.write.parquet(classesDir(root, g))
+        }
+        val bF = scala.concurrent.Future {
+          spark.sparkContext.setJobDescription(s"stage bands g=$g")
+          bt.repartitionByRange(
+              graft.ops.Banding.NumBands * filesPerBand,
+              col("band"), col("k0"))
+            .sortWithinPartitions(col("band"), col("k0"))
+            .write.partitionBy("band").parquet(bandsDir(root, g))
+        }
+        // settle BOTH sinks before propagating any failure (no
+        // write may be left in flight when the exception surfaces),
+        // under a generous bound instead of Duration.Inf
+        val settled = scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence(
+            Seq(cF, bF).map(_.transform(scala.util.Success(_)))),
+          FoldTimeout)
+        settled.foreach(_.get)
+      } finally drain(pool, root)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Cached
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -95,70 +96,71 @@ object ConnectedComponents {
   def label(nodes: DataFrame, edges: DataFrame,
             maxRounds: Int = 50, delta: Boolean = true,
             jumpAfter: Int = 8): DataFrame = {
-    // symmetrize once: propagation must flow both ways along a pair.
-    // Persisted PRE-PARTITIONED on the join key: every round joins
-    // sym on src, and a cached unpartitioned table would re-shuffle
-    // the FULL edge list once per round — the dominant per-round cost
-    // on real graphs (the frontier shrinks, the edge list doesn't).
-    // With HashPartitioning(src) cached, EnsureRequirements skips the
-    // edge-side exchange every round; only the (shrinking) frontier
-    // shuffles.
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .persist()
-    sym.count()
+    // sym is released on return: the labels are checkpointed blocks
+    Cached.scope {
+      // symmetrize once: propagation must flow both ways along a pair.
+      // Persisted PRE-PARTITIONED on the join key: every round joins
+      // sym on src, and a cached unpartitioned table would re-shuffle
+      // the FULL edge list once per round — the dominant per-round cost
+      // on real graphs (the frontier shrinks, the edge list doesn't).
+      // With HashPartitioning(src) cached, EnsureRequirements skips the
+      // edge-side exchange every round; only the (shrinking) frontier
+      // shuffles.
+      val sym = edges.select(col("src"), col("dst"))
+        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .repartition(col("src"))
+        .transform(Cached.fill)
 
-    val lblType = nodes.schema("id").dataType
-    // localCheckpoint: truncate lineage every round (see scaladoc).
-    // Round 0's is eager — nothing else materializes it.
-    var labels = nodes.select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(true)
-    // round 1: every label is news
-    var front = labels
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
-      // the previous label rides the union as `old` (null on the
-      // edge arm; every id has exactly one labels-arm row, so
-      // max(old) recovers it through the aggregation) — the
-      // convergence check then needs no extra join, and reads the
-      // already-checkpointed blocks
-      val viaEdge = sym
-        .join(front, sym("src") === front("id"))
-        .select(col("dst").as("id"), col("lbl"),
-          lit(null).cast(lblType).as("old"))
-      val mins = labels
-        .select(col("id"), col("lbl"), col("lbl").as("old"))
-        .union(viaEdge)
-        .groupBy(col("id"))
-        .agg(min(col("lbl")).as("lbl"), max(col("old")).as("old"))
-      // pointer jump: follow the label one more hop (labels always
-      // point at node ids, so the inner self-join is total) — this
-      // doubles propagation distance per round, making rounds
-      // logarithmic in the diameter instead of linear. Deferred
-      // until `jumpAfter` (see scaladoc): the common near-dup graph
-      // converges before it ever fires
-      val stepped = if (round < jumpAfter) mins
-        else mins
-          .join(mins.select(col("id").as("lbl"), col("lbl").as("lbl2")), "lbl")
-          .select(col("id"), col("lbl2").as("lbl"), col("old"))
-      val jumped = stepped
-        .localCheckpoint(false) // lazy: the count below materializes it
-      // null-safe: an edge endpoint missing from `nodes` surfaces with
-      // old=null in its first round — `=!=` would read that as
-      // "unchanged" and could stop the loop before it propagates
-      val changedRows = jumped.filter(!(col("lbl") <=> col("old")))
-      labels = jumped.select(col("id"), col("lbl"))
-      front = if (delta) changedRows.select(col("id"), col("lbl"))
-              else labels
-      round += 1
-      // the round's ONE action: it fills the lazy checkpoint, so the
-      // next round's two readers of it (the labels arm and the edge
-      // frontier) read stored blocks instead of each computing them
-      changed = changedRows.count()
+      val lblType = nodes.schema("id").dataType
+      // localCheckpoint: truncate lineage every round (see scaladoc).
+      // Round 0's is eager — nothing else materializes it.
+      var labels = nodes.select(col("id"), col("id").as("lbl"))
+        .localCheckpoint(true)
+      // round 1: every label is news
+      var front = labels
+      var changed = 1L
+      var round = 0
+      while (changed > 0 && round < maxRounds) {
+        // the previous label rides the union as `old` (null on the
+        // edge arm; every id has exactly one labels-arm row, so
+        // max(old) recovers it through the aggregation) — the
+        // convergence check then needs no extra join, and reads the
+        // already-checkpointed blocks
+        val viaEdge = sym
+          .join(front, sym("src") === front("id"))
+          .select(col("dst").as("id"), col("lbl"),
+            lit(null).cast(lblType).as("old"))
+        val mins = labels
+          .select(col("id"), col("lbl"), col("lbl").as("old"))
+          .union(viaEdge)
+          .groupBy(col("id"))
+          .agg(min(col("lbl")).as("lbl"), max(col("old")).as("old"))
+        // pointer jump: follow the label one more hop (labels always
+        // point at node ids, so the inner self-join is total) — this
+        // doubles propagation distance per round, making rounds
+        // logarithmic in the diameter instead of linear. Deferred
+        // until `jumpAfter` (see scaladoc): the common near-dup graph
+        // converges before it ever fires
+        val stepped = if (round < jumpAfter) mins
+          else mins
+            .join(mins.select(col("id").as("lbl"), col("lbl").as("lbl2")), "lbl")
+            .select(col("id"), col("lbl2").as("lbl"), col("old"))
+        val jumped = stepped
+          .localCheckpoint(false) // lazy: the count below materializes it
+        // null-safe: an edge endpoint missing from `nodes` surfaces with
+        // old=null in its first round — `=!=` would read that as
+        // "unchanged" and could stop the loop before it propagates
+        val changedRows = jumped.filter(!(col("lbl") <=> col("old")))
+        labels = jumped.select(col("id"), col("lbl"))
+        front = if (delta) changedRows.select(col("id"), col("lbl"))
+                else labels
+        round += 1
+        // the round's ONE action: it fills the lazy checkpoint, so the
+        // next round's two readers of it (the labels arm and the edge
+        // frontier) read stored blocks instead of each computing them
+        changed = changedRows.count()
+      }
+      labels.select(col("id"), col("lbl").as("component"))
     }
-    sym.unpersist()
-    labels.select(col("id"), col("lbl").as("component"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Cached
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,17 +10,15 @@ import org.apache.spark.sql.functions._
   * cached unpartitioned edge list re-shuffles in FULL once per
   * round, the dominant per-round cost; with HashPartitioning(src)
   * cached, EnsureRequirements skips the edge-side exchange every
-  * round). Eagerly materialized; the CALLER owns the cache lifetime
-  * (same contract as [[PageRank.run]]). */
+  * round). Eagerly materialized; the CALLER releases it with a
+  * [[graft.Cached.scope]] around build and action (same contract as
+  * [[PageRank.run]]). */
 private[graft] object GraphEdges {
   /** (a, b) undirected pairs in → cached (src, dst) with both
     * directions, hash-partitioned on src. */
-  def directedCached(edges: DataFrame): DataFrame = {
-    val dir = edges.select(col("a").as("src"), col("b").as("dst"))
+  def directedCached(edges: DataFrame): DataFrame =
+    edges.select(col("a").as("src"), col("b").as("dst"))
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
       .repartition(col("src"))
-      .persist()
-    dir.count()
-    dir
-  }
+      .transform(Cached.fill)
 }

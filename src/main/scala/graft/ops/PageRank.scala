@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Cached
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,15 +46,15 @@ object PageRank {
     *   flow, are the caller's concern).
     * @return (id, pr) — fixed-point rank after `iters` rounds.
     *
-    * Cache lifetime: the degree-annotated edge table is persisted
-    * here (it feeds every round) but the CALLER owns its release —
-    * the returned ranks are a lazy plan that reads the cached blocks
-    * on the caller's action, so unpersisting before that action would
-    * recompute the edge build once per round. In a long-lived session
-    * call `spark.catalog.clearCache()` (or unpersist by plan) after
-    * consuming the result; the gate runner does exactly that between
-    * queries. Same contract as the spanEdges substrate the x56 gate
-    * feeds in. */
+    * Cache lifetime: the degree-annotated edge table is filled here
+    * ([[graft.Cached.fill]], it feeds every round) but the CALLER owns
+    * its release — the returned ranks are a lazy plan that reads the
+    * cached blocks on the caller's action, so unpersisting before that
+    * action would recompute the edge build once per round. Build and
+    * consume the result inside one [[graft.Cached.scope]], which
+    * releases the table when the action is done; the gate runners
+    * wrap every gate that way. Same contract as the spanEdges
+    * substrate the x56 gate feeds in. */
   def run(edges: DataFrame, iters: Int = DefaultIters,
           scale: Long = DefaultScale): DataFrame = {
     require(iters >= 1, s"pagerank: iters must be >= 1, got $iters")
@@ -69,8 +70,7 @@ object PageRank {
     // table moves each round
     val contrib = dir.join(deg, Seq("src"))
       .repartition(col("src"))
-      .persist() // reused every round
-    contrib.count()
+      .transform(Cached.fill) // reused every round
     // every vertex has in-degree >= 1 (undirected doubling), so the
     // per-round agg covers the full vertex set — no outer join needed
     var ranks = deg.select(col("src").as("v"), lit(scale).as("r"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Cached
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -74,8 +75,7 @@ object SketchOverlap {
       maxDf: Int = 64, minShared: Int = 2): DataFrame = {
     val kt = df.select(col(keyCol).as("key"), col(tokCol).as("tok"))
       .distinct()
-      .repartition(col("tok")).persist()
-    kt.count()
+      .repartition(col("tok")).transform(Cached.fill)
     val kept = kt.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, maxDf)).select(col("tok"))
     kt.join(kept, Seq("tok"), "left_semi")

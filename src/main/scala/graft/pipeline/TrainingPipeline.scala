@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Cached
 import graft.ops.Cols.tokenSetSig
 import graft.queries.Extensions
 import graft.streaming.DocStreams
@@ -128,19 +129,16 @@ object TrainingPipeline {
   /** The whole pipeline. Output: surviving docs with (shard, pos,
     * n_tok, pack_seq, pack_off) placement columns.
     *
-    * The survivor set is persisted AND materialized eagerly before
+    * The survivor set is filled ([[graft.Cached.fill]]) before
     * sampling: the stratum-rate aggregation is a broadcast subtree
-    * over the same survivors as the main branch, and concurrent
-    * consumers racing a cold cache each recompute the whole
-    * dedup+filter chain (the measured x14 pitfall — at corpus scale
-    * that doubles the scan+shuffle cost). The survivors are the
-    * natural pipeline checkpoint: dedup classes, not raw documents. */
+    * over the same survivors as the main branch, and a racing cold
+    * read would recompute the whole dedup+filter chain. The survivors
+    * are the natural pipeline checkpoint: dedup classes, not raw
+    * documents. */
   def prepare(docs: DataFrame, cfg: Config = Config()): DataFrame = {
     val scrubbed = if (cfg.redactPii) redact(docs) else docs
-    val survivors = qualityFilter(
-      decontaminate(exactDedup(scrubbed), cfg.benchBigrams),
-      cfg.maxDupFrac).persist()
-    survivors.count()
+    val survivors = Cached.fill(qualityFilter(
+      decontaminate(exactDedup(scrubbed), cfg.benchBigrams), cfg.maxDupFrac))
     shuffleAndPack(stratifiedSample(survivors, cfg.targetPerLang),
       cfg.numShards, cfg.packLen)
   }

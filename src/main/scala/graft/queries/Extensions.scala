@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GateQuery, Tables}
+import graft.{Cached, GateQuery, Tables}
 import graft.GateQuery.ordered
 import graft.ops.Banding
 import graft.ops.Cols._
@@ -224,8 +224,7 @@ object Extensions {
   private val x03 = GateQuery(
     "x03_dedup_jaccard",
     (s, d) => {
-      val sigs = sigTable(s, d).persist() // four consumers below
-      sigs.count() // eager: consumers race on a cold cache (see x14)
+      val sigs = sigTable(s, d).transform(Cached.fill) // four consumers below
       // intra-mask pairs: identical masks are jac = 1.0 by identity —
       // equi-join on the mask, buckets = mask-class sizes, output-
       // sized. (Guard pc > 0: two empty masks score 0/0 = NaN in the
@@ -238,8 +237,7 @@ object Extensions {
           lit(1.0).as("jac"))
       // inter-mask candidates at distinct-mask granularity
       val dm = sigs.groupBy(col("mask")).agg(count(lit(1)).as("nsig"))
-        .persist()
-      dm.count()
+        .transform(Cached.fill)
       // epsilon loosens the float bounds so t*pc landing a hair above
       // an integer can never EXCLUDE an admissible popcount (the
       // prefilter may only over-admit; exactness lives in `jac`)
@@ -288,11 +286,9 @@ object Extensions {
     "x04_dedup_minhash",
     (s, d) => {
       // three consumers (minhash tokens + both verify sides), two of
-      // them broadcast subtrees: persist AND materialize eagerly so
-      // the tokenize → vocab → mask collapse runs once instead of
-      // once per racing consumer (see the x14 comment)
-      val sigs = sigTable(s, d).persist()
-      sigs.count()
+      // them broadcast subtrees: the tokenize → vocab → mask collapse
+      // runs once
+      val sigs = sigTable(s, d).transform(Cached.fill)
       ordered(verifiedMinhashPairs(s, d, sigs)
         .select(col("rep_a"), col("rep_b"), col("jac")))
     },
@@ -319,10 +315,8 @@ object Extensions {
       .select(col("rep"), col("arr"))
     // the self-join reads the band table twice and AQE does not reuse
     // the stage (see Banding.selfPairs) — materialize it once
-    val banded = Banding.bandTableArr(repArrs, "t:").persist()
-    banded.count()
-    val cand = Banding.selfPairs(banded).persist()
-    cand.count()
+    val banded = Banding.bandTableArr(repArrs, "t:").transform(Cached.fill)
+    val cand = Banding.selfPairs(banded).transform(Cached.fill)
     // verify-side masks: semi-join the signature table down to the ids
     // that actually appear in a candidate pair and broadcast only those
     // — the full sigs table is |distinct docs|-sized (corpus-scale at
@@ -768,28 +762,22 @@ object Extensions {
       // sigTable, in ONE groupBy instead of explode → vocab window →
       // join → bit_or (4 fewer stages on the cold path).
       //
-      // The rep bigram table and the candidate pairs are each used by
-      // several downstream joins — persist both AND materialize them
-      // eagerly (count) before the dependent joins are even built.
-      // Lazy persist is not enough: the consumers include broadcast
-      // subtrees, which execute concurrently on the driver; with a
-      // cold cache they race and each recomputes the whole signature
-      // collapse + LSH pipeline (measured 83s for a plan whose stages
-      // sum to 11s when forced in order). At 100 TB these are the
-      // small materialized index tables: distinct signatures, not
-      // documents — materializing them is the intended checkpoint.
+      // The rep bigram table and the candidate pairs each feed several
+      // downstream joins, broadcast subtrees among them: filled before
+      // the dependent joins are built (the race [[Cached]] documents).
+      // At 100 TB these are the small materialized index tables:
+      // distinct signatures, not documents — materializing them is the
+      // intended checkpoint.
       val reps = Tables.documents(s, d)
         .groupBy(tokenSetSig(col("text")).as("sig"))
         .agg(min(col("doc_id")).as("rep"))
         .join(Tables.documents(s, d), col("rep") === col("doc_id"))
         .select(col("rep"), bigramsExpr.as("bgs"))
-        .persist()
-      reps.count()
+        .transform(Cached.fill)
       val banded = Banding.bandTableArr(
-        reps.select(col("rep"), col("bgs").as("arr")), "b:").persist()
-      banded.count() // self-join side dedup — see Banding.selfPairs
-      val cand = Banding.selfPairs(banded).persist()
-      cand.count()
+        reps.select(col("rep"), col("bgs").as("arr")), "b:")
+        .transform(Cached.fill) // self-join side dedup — see Banding.selfPairs
+      val cand = Banding.selfPairs(banded).transform(Cached.fill)
       // verify-side bigrams: semi-join reps down to the ids that
       // actually appear in a candidate pair, and broadcast only those —
       // never the full corpus' bigram arrays
@@ -1019,12 +1007,10 @@ object Extensions {
       // class-membership join on sig — so neither re-shuffles the
       // corpus-sized mask table, and the sigs table inherits the
       // partitioning for its join side too
-      val masks = docMasks(s, d).repartition(col("sig")).persist()
-      masks.count()
+      val masks = docMasks(s, d).repartition(col("sig")).transform(Cached.fill)
       val sigs = masks.groupBy(col("sig"), col("mask"))
         .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("cnt"))
-        .persist()
-      sigs.count()
+        .transform(Cached.fill)
       val losers = verifiedMinhashPairs(s, d, sigs)
         .select(col("rep_b").as("loser")).distinct()
       // class membership joins on the EXACT sig key — a hashed-mask
@@ -1096,8 +1082,7 @@ object Extensions {
       val cents = v.crossJoin(broadcast(ivfPqNcells(v)))
         .filter(col("vec_id") < col("ncells"))
         .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-      val assigned = graft.ops.Ivf.assignCells(v, cents).persist()
-      assigned.count() // eager: both join sides consume it (see x14)
+      val assigned = graft.ops.Ivf.assignCells(v, cents).transform(Cached.fill) // both join sides
       val a = assigned.select(col("cell"), col("vec_id").as("id_a"),
                               col("embedding").as("ea"))
       val b = assigned.select(col("cell").as("cell_b"), col("vec_id").as("id_b"),
@@ -1163,8 +1148,7 @@ object Extensions {
   private val x22 = GateQuery(
     "x22_dedup_simhash",
     (s, d) => {
-      val sigs = sigTable(s, d).persist()
-      sigs.count() // eager: consumers race on a cold cache (see x14)
+      val sigs = sigTable(s, d).transform(Cached.fill)
       // per-row fused signatures over a repartitioned documents side
       // (the one-sided-projection pushdown pitfall — see
       // verifiedMinhashPairs); tokenSet staged once, hashed twice
@@ -1178,8 +1162,7 @@ object Extensions {
       val sh = sigs
         .join(docSh, col("rep") === col("doc_id"))
         .select(col("rep"), col("sh0"), col("sh1"))
-        .persist()
-      sh.count() // three consumers (banded + both verify sides)
+        .transform(Cached.fill) // three consumers (banded + both verify sides)
       val banded = (0 until SimHashBands).map { j =>
         val half = if (j < 2) col("sh0") else col("sh1")
         sh.select(col("rep"), lit(j).as("band"),
@@ -1574,8 +1557,7 @@ object Extensions {
                         element_at(bvs, b1 + 1) + element_at(bvs, b2 + 1) * 256 AS pv))))"""))
           .as(Seq("idx", "s")))
         .select(col("vec_id"), col("s.pb").as("band"), col("s.pv").as("bv"))
-        .persist()
-      banded.count() // self-join side dedup — see Banding.selfPairs
+        .transform(Cached.fill) // self-join side dedup — see Banding.selfPairs
       val cand = Banding.selfPairs(banded, ("id_a", "id_b"), id = "vec_id",
         keys = Banding.ValueKeys)
       val ea = Tables.embeddings(s, d)
@@ -1638,11 +1620,9 @@ object Extensions {
     * in 119ae52, since deleted). */
   private[graft] def x30Input(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val sigs = sigTable(s, d).persist()
-    sigs.count()
+    val sigs = sigTable(s, d).transform(Cached.fill)
     val pairs = verifiedMinhashPairs(s, d, sigs)
-      .select(col("rep_a"), col("rep_b")).persist()
-    pairs.count()
+      .select(col("rep_a"), col("rep_b")).transform(Cached.fill)
     (sigs.select(col("rep").as("id")),
       pairs.select(col("rep_a").as("src"), col("rep_b").as("dst")))
   }
@@ -1879,8 +1859,7 @@ object Extensions {
       .agg(min(col("doc_id")).as("rep"))
       .join(docs, col("rep") === col("doc_id"))
       .select(col("rep"), tokenSet(col("text")).as("toks"))
-      .persist()
-    reps.count()
+      .transform(Cached.fill)
     reps
   }
 
@@ -1938,12 +1917,11 @@ object Extensions {
           .as(Seq("j0", "t2")))
       .withColumn("i2", col("i1") + lit(1) + col("j0"))
       .select(col("rep"), col("n"), col("t1"), col("t2"), col("i2"))
-      .persist()
+      .transform(Cached.fill)
     // both self-join sides consume the pair-prefix table, and (the
     // Banding.selfPairs rule) AQE stage reuse does NOT fire across the
     // two identical InMemoryTableScan-rooted subtrees — without the
     // persist the double posexplode chain evaluates once per side
-    pairs.count()
     val lenOk =
       col("b.n") >= ceil(col("a.n") * lit(PfJaccard)) &&
         col("a.n") >= ceil(col("b.n") * lit(PfJaccard))
@@ -1965,8 +1943,7 @@ object Extensions {
     "x35_setjoin_prefix",
     (s, d) => {
       val reps = tokenSetReps(Tables.documents(s, d))
-      val otab = orderedSetTable(reps, PfJaccard).persist()
-      otab.count() // both candidate sides consume it
+      val otab = orderedSetTable(reps, PfJaccard).transform(Cached.fill) // both candidate sides
       val cand = ssjoinCandidates2(otab)
       val ta = reps.select(col("rep").as("rep_a"), col("toks").as("toks_a"))
       val tb = reps.select(col("rep").as("rep_b"), col("toks").as("toks_b"))
@@ -2015,16 +1992,14 @@ object Extensions {
       // sf parquet is a single split, and the bigram HOF is the
       // per-row cost — without the repartition the whole corpus
       // tokenizes serially in one task (measured 10.5 s vs 2.3 s),
-      // and without the persist the top-K broadcast subtree and the
-      // corpus side each recompute it (the x14 racing-consumers
-      // pitfall). At real scale the scan has many splits and the
-      // repartition is unnecessary but harmless (one narrow-row
-      // shuffle of raw text).
+      // and it is filled because the top-K broadcast subtree and the
+      // corpus side both read it. At real scale the scan has many
+      // splits and the repartition is unnecessary but harmless (one
+      // narrow-row shuffle of raw text).
       val bgs = Tables.documents(s, d)
         .repartition(col("doc_id"))
         .select(col("doc_id"), bigramsExpr.as("bgs"))
-        .persist()
-      bgs.count()
+        .transform(Cached.fill)
       val top = bgs.select(explode(col("bgs")).as("bg"))
         .groupBy(col("bg")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("bg")).limit(BoilerK)
@@ -2175,8 +2150,7 @@ object Extensions {
         x => floor(x * lit(1000)).cast("long"))
       val v = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), quant.as("qv"))
-        .persist() // centroid agg + scoring pass both consume it
-      v.count() // eager: consumers race on a cold cache (see x14)
+        .transform(Cached.fill) // centroid agg + scoring pass both consume it
       ordered(centroidClassify(v))
     },
     Some(s"""WITH v AS (
@@ -2253,8 +2227,7 @@ object Extensions {
         x => floor(x * lit(1000)).cast("long"))
       val v = Tables.embeddings(s, d)
         .select(col("vec_id"), quant.as("qv"))
-        .persist() // seeds + both assignment passes consume it
-      v.count() // eager: consumers race on a cold cache (see x14)
+        .transform(Cached.fill) // seeds + both assignment passes consume it
       kmeansCluster(v)
     },
     Some(s"""WITH v AS (
@@ -2393,8 +2366,7 @@ object Extensions {
         .agg(count(lit(1)).as("df_shard"),
           array_join(sort_array(collect_list(col("doc_id")))
             .cast("array<string>"), ",").as("postings"))
-        .persist()
-      shards.count() // two consumers (rollup feeds the df join back)
+        .transform(Cached.fill) // two consumers (rollup feeds the df join back)
       // no broadcast hint on `global`: it is vocabulary-sized (grows
       // with the corpus, the x35 argument) — both sides are already
       // hash-partitioned on `term` from the groupBys, so the equi-join
@@ -2449,16 +2421,14 @@ object Extensions {
       val bench = docs.filter(col("doc_id") % BenchMod === 0)
         .select(col("doc_id").as("bench_id"),
           graft.functions.TokenBigrams.tokenBigrams(editedText).as("bgs_b"))
-        .persist()
-      bench.count()
+        .transform(Cached.fill)
       // the corpus side is ALL documents — contamination means the
       // corpus CONTAINS benchmark text, so the bench slice's own
       // sources must stay in scope
       val corp = docs
         .repartition(col("doc_id")) // 1-split scan: spread the shingling
         .select(col("doc_id"), bigramsExpr.as("bgs"))
-        .persist()
-      corp.count()
+        .transform(Cached.fill)
       val bandB = Banding.bandTableArr(
         bench.select(col("bench_id").as("rep"), col("bgs_b").as("arr")), "b:")
       val bandC = Banding.bandTableArr(
@@ -2613,8 +2583,7 @@ object Extensions {
         x => floor(x * lit(1000)).cast("long"))
       val v = Tables.embeddings(s, d)
         .select(col("vec_id"), quant.as("qv"))
-        .persist() // codebook, encode pass and query set all consume it
-      v.count() // eager: consumers race on a cold cache (see x14)
+        .transform(Cached.fill) // codebook, encode pass and query set all consume it
       pqTopK(v)
     },
     Some(s"""WITH v AS (
@@ -2707,8 +2676,7 @@ object Extensions {
     val spans = docs.select(col("doc_id"),
       explode(graft.functions.SpanHashes.spanHashes(col("text"), w, winnow))
         .as("sh"))
-      .persist() // the per-span count and the flag join both consume it
-    spans.count()
+      .transform(Cached.fill) // the per-span count and the flag join both consume it
     val perSpan = spans.groupBy(col("sh"))
       .agg(count(lit(1)).as("n_docs"))
     val perDoc = spans.join(perSpan, Seq("sh"))
@@ -2768,13 +2736,11 @@ object Extensions {
       val toks = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("tok"))
       // sketch + n in ONE corpus pass; the result is a single row —
-      // persist it eagerly so its two consumers don't re-run the scan
-      // (cold-cache race, see x14)
+      // filled so its two consumers don't re-run the scan
       val sketch = toks.agg(
         graft.functions.FreqCandidatesAgg.freqCandidates(col("tok"), HhK)
           .as("cand"),
-        count(lit(1)).as("n")).persist()
-      sketch.count()
+        count(lit(1)).as("n")).transform(Cached.fill)
       val cand = sketch.select(explode(col("cand")).as("tok"))
       val exact = toks.join(broadcast(cand), Seq("tok"), "left_semi")
         .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
@@ -2819,8 +2785,7 @@ object Extensions {
     // (two scoring passes + centroid shuffle) runs three times
     val asg = kmeansCluster(v, k).select(col("vec_id"), col("cluster"))
       .join(v, Seq("vec_id"))
-      .persist()
-    asg.count()
+      .transform(Cached.fill)
     val a = asg.select(col("cluster"),
       col("vec_id").as("id_a"), col("qv").as("qa"))
     val b = asg.select(col("cluster"),
@@ -2842,8 +2807,7 @@ object Extensions {
         x => floor(x * lit(1000)).cast("long"))
       val v = Tables.embeddings(s, d)
         .select(col("vec_id"), quant.as("qv"))
-        .persist() // seeds, two assignment passes and both pair sides
-      v.count() // eager: consumers race on a cold cache (see x14)
+        .transform(Cached.fill) // seeds, two assignment passes and both pair sides
       semDedupKeep(v)
     },
     Some(s"""WITH v AS (
@@ -2987,8 +2951,7 @@ object Extensions {
       val top = pairs
         .orderBy(col("cnt").desc, col("pair")).limit(1)
         .select(col("pair"), col("cnt"))
-        .persist()
-      top.count()
+        .transform(Cached.fill)
       // rewrite: greedy left-to-right replace of the winner, corpus
       // stays put (one broadcast row in a cross join)
       seqs = seqs.crossJoin(broadcast(top))
@@ -3134,7 +3097,8 @@ object Extensions {
     * w-token window (fused native [[graft.functions.SpanHashes]]
     * build — document text never shuffles, only (doc_id, hash) rows).
     * The dedup-graph substrate under x51 (triangles), x56 (PageRank)
-    * and x62 (two-hop reach); callers persist.
+    * and x62 (two-hop reach); callers fill it ([[Cached.fill]]) and
+    * release it with the [[Cached.scope]] their action runs in.
     *
     * Scale shape: the span table is shuffled ONCE onto sh
     * (`repartition` + persist; the df pre-count, the semi-join, and
@@ -3154,8 +3118,7 @@ object Extensions {
                                maxDf: Int = SpanDfCap): DataFrame = {
     val spans = docs.select(col("doc_id"),
       explode(graft.functions.SpanHashes.spanHashes(col("text"), w)).as("sh"))
-      .repartition(col("sh")).persist()
-    spans.count() // three aligned consumers below; materialize once
+      .repartition(col("sh")).transform(Cached.fill) // three aligned consumers below
     val kept = spans.groupBy(col("sh")).agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, maxDf)).select(col("sh"))
     spans.join(kept, Seq("sh"), "left_semi")
@@ -3200,8 +3163,7 @@ object Extensions {
     "x51_triangle_count",
     (s, d) => {
       val edges = spanEdges(Tables.documents(s, d), TriW)
-        .persist() // degree agg + orientation both consume it
-      edges.count()
+        .transform(Cached.fill) // degree agg + orientation both consume it
       // Degree orientation: point every edge from its lower-(deg, id)
       // endpoint to its higher one. Each triangle then has exactly one
       // vertex with both wedge edges outgoing (its min-key vertex), so
@@ -3226,8 +3188,7 @@ object Extensions {
         // cached-partitioning move as ConnectedComponents/PageRank);
         // only the closing join's (v, w) re-key pays an exchange
         .repartition(col("src"))
-        .persist() // both wedge sides + the closing join consume it
-      dir.count()
+        .transform(Cached.fill) // both wedge sides + the closing join consume it
       // wedge at the pivot: two out-edges of src, canonically ordered
       // by the same (deg, id) key so each unordered pair appears once;
       // the closing edge v→w is then guaranteed to be oriented v→w.
@@ -3390,15 +3351,13 @@ object Extensions {
         .select(col("doc_id"),
           (pmod(hex32(md5(col("text"))), lit(10)) < 8).as("is_train"),
           bigramsExpr.as("bgs"))
-        .persist()
-      docs.count()
+        .transform(Cached.fill)
       def side(train: Boolean) = Banding.bandTableArr(
         docs.filter(if (train) col("is_train") else !col("is_train"))
           .select(col("doc_id").as("rep"), col("bgs").as("arr")), "b:")
       val cand = Banding.crossPairs(side(train = true), side(train = false),
           ("train_id", "test_id"))
-        .persist()
-      cand.count()
+        .transform(Cached.fill)
       def candBgs(idCol: String, bgsCol: String) = docs
         .join(cand.select(col(idCol).as("doc_id")).distinct(), "doc_id")
         .select(col("doc_id").as(idCol), col("bgs").as(bgsCol))
@@ -3471,8 +3430,7 @@ object Extensions {
   private val x56 = GateQuery(
     "x56_pagerank",
     (s, d) => {
-      val edges = spanEdges(Tables.documents(s, d), TriW).persist()
-      edges.count()
+      val edges = spanEdges(Tables.documents(s, d), TriW).transform(Cached.fill)
       ordered(graft.ops.PageRank.run(edges)
         .select(col("id").as("doc_id"), col("pr")))
     },
@@ -3717,8 +3675,7 @@ object Extensions {
       val st = Tables.documents(s, d)
         .select(col("source"), explode(bigramsExpr).as("tok"))
         .distinct()
-        .persist() // sizes agg + pair self-join both consume it
-      st.count()
+        .transform(Cached.fill) // sizes agg + pair self-join both consume it
       val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("n"))
       val pairs = st.as("a")
         .join(st.as("b"), col("a.tok") === col("b.tok") &&
@@ -3777,8 +3734,7 @@ object Extensions {
         .select(col("key_a").as("src_a"), col("key_b").as("src_b"),
           col("est_inter"), col("est_jaccard"))
       // exact rollup (x61's shape) — the pin
-      val st = toks.distinct().persist()
-      st.count()
+      val st = toks.distinct().transform(Cached.fill)
       val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("n"))
       val exact = st.as("a")
         .join(st.as("b"), col("a.tok") === col("b.tok") &&
@@ -3872,8 +3828,7 @@ object Extensions {
   private val x67 = GateQuery(
     "x67_label_prop",
     (s, d) => {
-      val edges = spanEdges(Tables.documents(s, d), TriW).persist()
-      edges.count()
+      val edges = spanEdges(Tables.documents(s, d), TriW).transform(Cached.fill)
       ordered(graft.ops.LabelPropagation.run(edges, LpaIters)
         .select(col("id").as("doc_id"), col("community")))
     },
@@ -3983,8 +3938,7 @@ object Extensions {
       val docBg = pos.groupBy(col("doc_id"), col("bg"))
         .agg(count(lit(1)).as("tf"))
         .repartition(col("bg"))
-        .persist()
-      docBg.count() // three consumers below; materialize once
+        .transform(Cached.fill) // three consumers below; materialize once
       val cBg = docBg.groupBy(col("bg")).agg(sum(col("tf")).as("c_bg"))
       val cW1 = docBg
         .select(split(col("bg"), " ").getItem(0).as("w1"), col("tf"))
@@ -4092,10 +4046,8 @@ object Extensions {
     * cases. Persists both inputs (each feeds several join sides). */
   private[graft] def containmentJoin(bench: DataFrame, corp: DataFrame,
                                      thr: Double): DataFrame = {
-    val b = bench.persist()
-    b.count() // ordering + verify consume it
-    val c = corp.persist()
-    c.count() // df + candidate + verify consume it
+    val b = Cached.fill(bench) // ordering + verify consume it
+    val c = Cached.fill(corp) // df + candidate + verify consume it
     val corpTok = c.select(col("rep"),
       size(col("toks_b")).cast("long").as("n_b"),
       explode(col("toks_b")).as("tok"))
@@ -4187,8 +4139,7 @@ object Extensions {
         .select(col("doc_id"), bigramsExpr.as("bgs"))
         .select(col("doc_id"), size(col("bgs")).cast("long").as("n_bg"),
           explode(col("bgs")).as("bg"))
-        .persist()
-      base.count() // first-occurrence agg + per-doc sizes consume it
+        .transform(Cached.fill) // first-occurrence agg + per-doc sizes consume it
       val novel = base.groupBy(col("bg")).agg(min(col("doc_id")).as("doc_id"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("novel"))
       val dtab = base.groupBy(col("doc_id")).agg(max(col("n_bg")).as("n_bg"))
@@ -4238,8 +4189,7 @@ object Extensions {
       // persist+count first: KCore's direction-doubling union reads
       // the edge list twice, and the span self-join must not build
       // twice inside the one materializing job (the x67 pattern)
-      val edges = spanEdges(Tables.documents(s, d), TriW).persist()
-      edges.count()
+      val edges = spanEdges(Tables.documents(s, d), TriW).transform(Cached.fill)
       // fixed-round semantics: a vertex that lost neighbors in the
       // LAST round may report deg < k — exactly what the oracle's
       // unrolled CTEs replay (see graft.ops.KCore)
@@ -4306,8 +4256,7 @@ object Extensions {
     * pins batch/stream equality on the real corpus). */
   private[graft] def signaturesFromTf(tf0: DataFrame, k: Int,
                                       buckets: Int): DataFrame = {
-      val tf = tf0.persist()
-      tf.count() // sdf + n_src + score join consume it
+      val tf = Cached.fill(tf0) // sdf + n_src + score join consume it
       val sdf = tf.groupBy(col("term")).agg(count(lit(1)).as("sdf"))
       val nSrc = tf.agg(countDistinct(col("source")).as("n_src"))
       val scored = tf.join(sdf, "term")
@@ -4402,18 +4351,18 @@ object Extensions {
         .select(col("rep"), col("arr"),
           graft.functions.MinHashArr.minhashArr(col("arr"), "t:").as("mhs"))
         .filter(col("mhs").isNotNull)
-        .persist() // band table + both calibration sides consume it
-      val banded = Banding.bandsOf(repTab.select(col("rep"), col("mhs"))).persist()
-      banded.count() // self-join sides; also materializes repTab
+        .transform(Cached.keep) // band table + both calibration sides consume it
+      val banded = Banding.bandsOf(repTab.select(col("rep"), col("mhs")))
+        .transform(Cached.fill) // self-join sides; also materializes repTab
       val cand = Banding.selfPairs(banded)
         .filter(hex32(md5(concat_ws(":", col("rep_a"), col("rep_b"))))
           % CalSampleMod === 0)
-        .persist()
+        .transform(Cached.keep)
       // one scan of cand's unfilled cache: a union of two would race
       // its legs over that cache and recompute the candidate join
       val candIds = cand
         .select(explode(array(col("rep_a"), col("rep_b"))).as("rep"))
-        .distinct().persist()
+        .distinct().transform(Cached.keep)
       // MEASURED broadcast (the x86 IngestBcastClassCap discipline —
       // this was the tree's last unconditional hint): candidate reps
       // are class-level and 1-in-4 sampled, but on a near-dup-dense
@@ -4499,8 +4448,7 @@ object Extensions {
         x => floor(x * lit(1000)).cast("long"))
       val v = Tables.embeddings(s, d)
         .select(col("vec_id"), quant.as("qv"))
-        .persist() // pq pipeline + both exact sides consume it
-      v.count()
+        .transform(Cached.fill) // pq pipeline + both exact sides consume it
       val pq = pqTopK(v).select(col("qid"), col("vec_id"), col("adist"))
       val qv = v.filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("qid"), col("qv").as("qv_q"))
@@ -4642,8 +4590,7 @@ object Extensions {
   private val x62 = GateQuery(
     "x62_two_hop_reach",
     (s, d) => {
-      val edges = spanEdges(Tables.documents(s, d), TriW).persist()
-      edges.count()
+      val edges = spanEdges(Tables.documents(s, d), TriW).transform(Cached.fill)
       val dir = edges.select(col("a").as("src"), col("b").as("dst"))
         .union(edges.select(col("b").as("src"), col("a").as("dst")))
       val hop2 = dir.select(col("src"), col("dst").as("mid"))
@@ -4902,8 +4849,7 @@ object Extensions {
   private[graft] def pmiFromPairCounts(cAb0: DataFrame,
       minCount: Long): DataFrame = {
     val cAb = cAb0
-      .persist() // marginals ×2, N, and the scored join all consume it
-    cAb.count()
+      .transform(Cached.fill) // marginals ×2, N, and the scored join all consume it
     val cA = cAb.select(split(col("p"), " ").getItem(0).as("w1"), col("c_ab"))
       .groupBy(col("w1")).agg(sum(col("c_ab")).as("c_a"))
     val cB = cAb.select(split(col("p"), " ").getItem(1).as("w2"), col("c_ab"))
@@ -5102,11 +5048,9 @@ object Extensions {
           (col("doc_id") % 5).cast("string")).as("key"),
         explode(graft.functions.SpanHashes.spanHashes(
           col("text"), OvSpanW, 1)).as("tok"))
-      val kt = toks.distinct().persist()
-      kt.count() // generator, sketches, sizes, and the exact pin share it
+      val kt = toks.distinct().transform(Cached.fill) // generator, sketches, sizes, exact pin
       val cand = graft.ops.SketchOverlap.cooccurrenceCandidates(
-        kt, "key", "tok", OvTokDfCap, OvMinShared).persist()
-      cand.count()
+        kt, "key", "tok", OvTokDfCap, OvMinShared).transform(Cached.fill)
       val est = graft.ops.SketchOverlap.overlapPairs(
         graft.ops.SketchOverlap.keySketches(kt, "key", "tok"),
         cand.select(col("key_a"), col("key_b")))
@@ -5409,10 +5353,7 @@ object Extensions {
       // (the Lloyd update's assign-and-mean); unpersisted, every
       // consumer (assignment, probes, codebook, encode) re-runs that
       // subtree — measured 2 extra corpus passes in the x80 plan.
-      // Persist + eager count so the passes run once (the x14 cold-
-      // cache race discipline).
-      val cents = ivfPqCentModel(v).persist()
-      cents.count()
+      val cents = ivfPqCentModel(v).transform(Cached.fill)
       // the coarse assignment feeds both the codebook training and
       // the encode UNPERSISTED on purpose: it is a stateless per-row
       // native encode over the persisted v, and the round-15 A/B
@@ -5421,8 +5362,7 @@ object Extensions {
       // SLOWER than recomputing it (3.38 s vs 3.17 s through the x80
       // pipeline, min-of-3 same session)
       val assigned = ivfPqAssign(v, cents)
-      val rcb = ivfPqCodebook(assigned).persist()
-      rcb.count()
+      val rcb = ivfPqCodebook(assigned).transform(Cached.fill)
       val enc = ivfPqEncodeDf(assigned, rcb)
       ivfPqAdcRankedWith(v, cents, enc, corpusScaledR)
   }
@@ -5662,8 +5602,7 @@ object Extensions {
         x => floor(x * lit(1000)).cast("long"))
       val v = Tables.embeddings(s, d)
         .select(col("vec_id"), quant.as("qv"))
-        .persist() // centroids, codebook, corpus and queries all consume it
-      v.count() // eager: consumers race on a cold cache (see x14)
+        .transform(Cached.fill) // centroids, codebook, corpus and queries all consume it
       // corpusScaledR: the gate corpus IS the isotropic fixture
       ordered(ivfPqTopK(v, corpusScaledR = true))
     },
@@ -5883,8 +5822,7 @@ object Extensions {
       // both cuts of ONE ADC ranking: the re-ranked answer (x80's
       // path) and the ADC-only top-K — the audit exposes the re-rank
       // LIFT, which is the number that justifies the extra exact pass
-      val adc = ivfPqAdcRanked(v, corpusScaledR).persist()
-      adc.count() // re-rank + adc-only cut both consume it
+      val adc = ivfPqAdcRanked(v, corpusScaledR).transform(Cached.fill) // re-rank + adc-only cut
       def recallOf(ans: DataFrame, h: String) =
         ans.select(col("qid"), col("vec_id"))
           .join(truthK, Seq("qid", "vec_id"), "left_semi")
@@ -5948,8 +5886,7 @@ object Extensions {
         x => floor(x * lit(1000)).cast("long"))
       val v = Tables.embeddings(s, d)
         .select(col("vec_id"), quant.as("qv"))
-        .persist() // index build, queries and truth scan all consume it
-      v.count() // eager: consumers race on a cold cache (see x14)
+        .transform(Cached.fill) // index build, queries and truth scan all consume it
       // corpusScaledR: the gate corpus IS the isotropic fixture
       ivfPqRecallAudit(v, corpusScaledR = true)
     },
@@ -6002,8 +5939,7 @@ object Extensions {
     "x98_ivfpq_clustered",
     (s, d) => {
       val v = x98ClusteredCorpus(s, d)
-        .persist() // index build, queries and truth scan all consume it
-      v.count() // eager: consumers race on a cold cache (see x14)
+        .transform(Cached.fill) // index build, queries and truth scan all consume it
       // corpusScaledR OFF: this gate proves the production default
       ivfPqRecallAudit(v, corpusScaledR = false)
     },
@@ -6037,8 +5973,7 @@ object Extensions {
         x => floor(x * lit(1000)).cast("long"))
       val v = Tables.embeddings(s, d)
         .select(col("vec_id"), quant.as("qv"))
-        .persist() // history build, delta encode and split all consume it
-      v.count()
+        .transform(Cached.fill) // history build, delta encode and split all consume it
       val h = v.agg(expr("count(1) div 2").as("h"))
       val hist = v.crossJoin(broadcast(h)).filter(col("vec_id") < col("h"))
         .select(col("vec_id"), col("qv"))
@@ -6268,13 +6203,11 @@ object Extensions {
     * quantile-bucket threshold semantics on hand fixtures. */
   private[graft] def protoPrune(vIn: DataFrame,
       prunePm: Long = ProtoPrunePm): DataFrame = {
-    val v = vIn.persist() // centroid agg + scoring pass both consume it
-    v.count() // eager: consumers race on a cold cache (see x14)
+    val v = Cached.fill(vIn) // centroid agg + scoring pass both consume it
     val cents = sumCentroids(v.select(col("label").as("clabel"), col("qv")))
       .withColumnRenamed("clabel", "label")
     val sc = protoScore(v, cents)
-      .persist() // histogram + final flag pass both consume it
-    sc.count()
+      .transform(Cached.fill) // histogram + final flag pass both consume it
     ordered(protoFlag(sc, protoThresholds(sc, prunePm)))
   }
 
@@ -6465,17 +6398,17 @@ object Extensions {
     // materializes them race-free while doing the work the dropped
     // counts did. batMembers lost its persist outright: it is a
     // narrow projection consumed exactly once, by the final join.
-    val regC = regClasses.persist()
+    val regC = Cached.keep(regClasses)
     val batMembers = bat.withColumn("sig", sigOf)
       .select(col("doc_id"), col("sig"))
     val batC = bat.withColumn("sig", sigOf).select(col("sig"), col("arr"))
-      .dropDuplicates("sig").persist()
+      .dropDuplicates("sig").transform(Cached.keep)
     val regB = Banding.bandTableArr(regC.select(col("sig").as("rep"), col("arr")), "t:")
     val batB = Banding.bandTableArr(batC.select(col("sig").as("rep"), col("arr")), "t:")
     // identical token sets agree on every band, so exact-duplicate
     // registry classes are candidates of the batch class by
     // construction — no same-sig special case needed
-    val cand = Banding.crossPairs(batB, regB, ("bsig", "rsig")).persist()
+    val cand = Banding.crossPairs(batB, regB, ("bsig", "rsig")).transform(Cached.keep)
     // Verify sides restrict to classes that appear in a candidate
     // pair (x04's candidate-semi-join pattern). An UNCONDITIONAL
     // broadcast hint here is a scale bug: the batch side is
@@ -6590,8 +6523,7 @@ object Extensions {
       val docArrs = Tables.documents(s, d)
         .repartition(col("doc_id"))
         .select(col("doc_id"), tokenSet(col("text")).as("arr"))
-        .persist()
-      docArrs.count()
+        .transform(Cached.fill)
       incrementalIngest(
         docArrs.filter(col("doc_id") % 4 =!= 0),
         docArrs.filter(col("doc_id") % 4 === 0))
@@ -6630,7 +6562,7 @@ object Extensions {
       sum(col("c")).over(Window.partitionBy(col("lang"))
         .orderBy(col("hb").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .join(n, "lang").persist() // t1 + t2 both consume it
+      .join(n, "lang").transform(Cached.keep) // t1 + t2 both consume it
     val t1 = cum.filter(col("cum") * 3 >= col("n"))
       .groupBy(col("lang")).agg(min(col("hb")).as("t1"))
     val t2 = cum.filter(col("cum") * 3 >= col("n") * 2)
@@ -6646,8 +6578,7 @@ object Extensions {
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
       .withColumn("spb", expr("bits_sum * 1000 div n_bg"))
       .withColumn("hb", expr(s"spb div $CcnetHb"))
-      .persist() // histogram + final assignment both consume it
-    d.count()
+      .transform(Cached.fill) // histogram + final assignment both consume it
     ordered(d.join(broadcast(ccnetThresholds(d)), "lang")
       .select(col("doc_id"), col("lang"), col("spb"),
         when(col("hb") <= col("t1"), "head")
@@ -6745,8 +6676,7 @@ object Extensions {
     // along for the fused native gram pass
     val tkd = docs
       .select(col("doc_id"), col("text"), split(col("text"), " ").as("tk"))
-      .persist()
-    tkd.count()
+      .transform(Cached.fill)
     // positional w-token hashes in ONE native pass (GramHashes — no
     // per-window slice/join strings; bit-identical to the HOF
     // formulation the oracle replays, GramHashesSpec)
@@ -6754,8 +6684,7 @@ object Extensions {
         explode(graft.functions.GramHashes.gramHashes(col("text"), w, w))
           .as("e"))
       .select(col("doc_id"), col("e")("i").as("i"), col("e")("g").as("sh"))
-      .persist() // dup-set agg + start-position join both consume it
-    ps.count()
+      .transform(Cached.fill) // dup-set agg + start-position join both consume it
     val dup = ps.select(col("doc_id"), col("sh")).distinct()
       .groupBy(col("sh")).agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= 2).select(col("sh"))
@@ -6879,8 +6808,7 @@ object Extensions {
     "x89_scrub_audit",
     (s, d) => {
       val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("text")).persist()
-      docs.count() // scrub + before-counts both consume it
+        .select(col("doc_id"), col("text")).transform(Cached.fill) // scrub + before-counts
       val before = spanDedupCounts(docs)
         .withColumnRenamed("n_spans", "n_spans_before")
         .withColumnRenamed("dup_spans", "dup_before")
@@ -6995,8 +6923,7 @@ object Extensions {
       hamT: Int, cap: Int = FpBandCap): DataFrame = {
     val classes = hashed.groupBy(col("ah"))
       .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("cmin"))
-      .persist() // banding + near-agg + final join consume it
-    classes.count()
+      .transform(Cached.fill) // banding + near-agg + final join consume it
     val banded = classes.select(col("ah"), posexplode(array(
       (0 until 4).map(b => expr(s"shiftright(ah, ${16 * b}) & 65535")): _*))
       .as(Seq("band", "k")))
@@ -7190,8 +7117,7 @@ object Extensions {
             (v << 16) | (v << 8) | v
           })
           (id, graft.multimodal.Media.averageHash(png).get)
-        }.toDF("doc_id", "ah").persist()
-      hashed.count() // class agg + final doc join both consume it
+        }.toDF("doc_id", "ah").transform(Cached.fill) // class agg + final doc join both consume it
       hashClassNearDup(hashed, PhashHamT)
     },
     Some(s"""WITH px AS (
@@ -7240,8 +7166,7 @@ object Extensions {
             (((off * 97 + 31 * i * i) % 65536) - 32768).toShort)
           val wav = graft.multimodal.Media.encodeWav(samples, 8000)
           (id, graft.multimodal.Media.energyHash(wav).get)
-        }.toDF("doc_id", "ah").persist()
-      hashed.count() // class agg + final doc join both consume it
+        }.toDF("doc_id", "ah").transform(Cached.fill) // class agg + final doc join both consume it
       hashClassNearDup(hashed, AudioHamT)
     },
     Some(s"""WITH en AS (
@@ -7285,8 +7210,7 @@ object Extensions {
       val scored = qualityScored(Tables.documents(s, d), carry = Seq("text"))
       val t = scored.select(col("doc_id"), col("quality_score"),
           graft.ops.Cols.tokenSetSig(col("text")).as("sig"))
-        .persist() // election + flag join both consume it
-      t.count()
+        .transform(Cached.fill) // election + flag join both consume it
       val best = t.groupBy(col("sig"))
         .agg(count(lit(1)).as("cls_n"),
           max(struct(col("quality_score"), (-col("doc_id")).as("nid")))
@@ -7341,7 +7265,7 @@ object Extensions {
     (s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .persist()
+        .transform(Cached.keep)
       val nDocs = docs.count()
       val text = spanDedupCounts(docs)
         .select(col("doc_id"), (col("dup_spans") >= 1).as("text_dup"))
@@ -7359,8 +7283,7 @@ object Extensions {
               (((aoff * 97 + 31 * i * i) % 65536) - 32768).toShort), 8000)
           (id, graft.multimodal.Media.averageHash(png).get,
             graft.multimodal.Media.energyHash(wav).get)
-        }.toDF("doc_id", "iah", "aah").persist()
-      media.count()
+        }.toDF("doc_id", "iah", "aah").transform(Cached.fill)
       def classDup(c: String, flag: String) = {
         val cls = media.groupBy(col(c)).agg(count(lit(1)).as("cnt"))
         media.select(col("doc_id"), col(c))
@@ -7455,13 +7378,11 @@ object Extensions {
     * (doc_id, dup_r0, rm_r1, dup_r1, …, rm_rN, dup_rN). */
   private[graft] def scrubRoundAudit(docs0: DataFrame,
       rounds: Int = ScrubRounds, w: Int = ScrubW): DataFrame = {
-    var cur = docs0.select(col("doc_id"), col("text")).persist()
-    cur.count()
+    var cur = docs0.select(col("doc_id"), col("text")).transform(Cached.fill)
     var outp = spanDedupCounts(cur, w)
       .select(col("doc_id"), col("dup_spans").as("dup_r0"))
     for (r <- 1 to rounds) {
-      val sc = spanScrub(cur, w).persist()
-      sc.count() // next round's corpus + the rm column both consume it
+      val sc = spanScrub(cur, w).transform(Cached.fill) // next round's corpus + the rm column
       val nxt = sc.select(col("doc_id"), col("clean").as("text"))
       outp = outp
         .join(sc.select(col("doc_id"), col("n_removed").as(s"rm_r$r")),
@@ -7489,8 +7410,7 @@ object Extensions {
     var residual = -1L
     while (r < maxRounds && residual != 0L) {
       cur = spanScrub(cur, w)
-        .select(col("doc_id"), col("clean").as("text")).persist()
-      cur.count()
+        .select(col("doc_id"), col("clean").as("text")).transform(Cached.fill)
       residual = spanDedupCounts(cur, w)
         .agg(coalesce(sum(col("dup_spans")), lit(0L)))
         .head().getLong(0)
@@ -7585,8 +7505,7 @@ object Extensions {
       val docArrs = Tables.documents(s, d)
         .repartition(col("doc_id"))
         .select(col("doc_id"), tokenSet(col("text")).as("arr"))
-        .persist()
-      docArrs.count()
+        .transform(Cached.fill)
       val day0 = docArrs.filter(
         col("doc_id") % 4 === 1 || col("doc_id") % 4 === 2)
       val day1 = docArrs.filter(col("doc_id") % 4 === 3)
@@ -7706,8 +7625,7 @@ object Extensions {
     require(dupWinnow >= 1, "dupWinnow >= 1")
     val tkd = docs
       .select(col("doc_id"), col("text"), split(col("text"), " ").as("tk"))
-      .persist() // the gram pass and the coverage pass both consume it
-    tkd.count()
+      .transform(Cached.fill) // the gram pass and the coverage pass both consume it
     // positional n-grams for every n in ONE fused native pass
     // (graft.functions.GramHashes: tokens UTF-8-encoded once, digest
     // fed incrementally — no per-window slice/join strings;
@@ -7724,8 +7642,7 @@ object Extensions {
     val pos = (if (dupWinnow == 1) posAll
       else posAll.filter(col("n") <= GopherTopNs.max ||
         pmod(hex32(col("g")), lit(dupWinnow.toLong)) === 0))
-      .persist() // counts + both start-set joins consume it
-    pos.count()
+      .transform(Cached.fill) // counts + both start-set joins consume it
     val cnts = pos.groupBy(col("doc_id"), col("n"), col("g"))
       .agg(count(lit(1)).as("cnt"))
     // n <= 4: the single most frequent gram (ties -> smallest hash)

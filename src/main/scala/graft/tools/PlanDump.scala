@@ -93,15 +93,15 @@ object PlanDump {
     println(f"${"query"}%-30s ${"min_s"}%8s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"shufMB"}%8s ${"inMB"}%8s")
     val rows = names.map { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"plandump: $name")
-      val df = fn(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val plan = graft.Cached.scope {
+        fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      }
       java.nio.file.Files.write(outDir.resolve(s"${name}_$tag.txt"),
         canonical(plan).getBytes("UTF-8"))
       var best = Double.MaxValue
       var bj = 0; var bs = 0; var bt = 0; var bsh = 0L; var bin = 0L
-      for (_ <- 1 to passes) {
-        spark.catalog.clearCache()
+      for (_ <- 1 to passes) graft.Cached.scope {
         resetCounters()
         val t0 = System.nanoTime()
         try {
@@ -114,7 +114,6 @@ object PlanDump {
           bsh = shufR.get + shufW.get; bin = inBytes.get
         }
       }
-      spark.catalog.clearCache()
       println(f"$name%-30s $best%8.3f $bj%5d $bs%7d $bt%6d ${bsh / 1e6}%8.1f ${bin / 1e6}%8.1f")
       (name, best)
     }

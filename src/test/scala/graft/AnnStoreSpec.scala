@@ -185,6 +185,23 @@ class AnnStoreSpec extends AnyFunSuite {
       s"unexpected failure mode: ${ex.getMessage}")
   }
 
+  test("a build that fails after training releases its model caches") {
+    // the centroid and codebook caches are filled, then the model write
+    // fails: no LZO codec is on the classpath
+    val (hist, _) = halves(quantized)
+    val entries = TestSpark.cacheEntries
+    val codec = "spark.sql.parquet.compression.codec"
+    val was = spark.conf.get(codec)
+    spark.conf.set(codec, "lzo")
+    val ex = try intercept[Exception](AnnStore.build(hist, tempRoot("leak")))
+      finally spark.conf.set(codec, was)
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).toLowerCase.contains("lzo")),
+      s"the build failed before its model write: $ex")
+    assert(TestSpark.cacheEntries == entries,
+      "the failed build left its cents/rcb cache entries behind")
+  }
+
   // ------------------------------------------------------- drift audit
   /** Mean recall@5 over the NumQueries probe queries: fraction of the
     * exact L2² top-5 (computed driver-side from the collected corpus —

@@ -9,8 +9,12 @@
 #   graft.Verify         <sf0.01>  <dir>/verify           (results + oracle SQL)
 # and prints `diff -r` of the two plan dumps, `cmp` of the two
 # oracle_sql.json files, and tools/precheck.py (DuckDB oracle check) for
-# the worktree. Clean diff + equal oracle SQL + "N ok, 0 fail" means no
-# gate plan, oracle query or result moved.
+# the worktree, then counts two warnings in the worktree's PlanDump and
+# Verify log: `Asked to cache already cached data` (a persist of a plan
+# that is already cached) and `already exists on this machine; not
+# re-adding it` (two consumers computed one persisted partition). Clean
+# diff + equal oracle SQL + "N ok, 0 fail" + both counts 0 means no gate
+# plan, oracle query or result moved and no cache was filled twice.
 #
 # Environment: TESTDATA (default $HOME/testdata) holds sf0.001 and sf0.01;
 # SPARK_GRAFT_CPUS (default 4) and SPARK_DRIVER_MEM (default 4g) size the
@@ -53,5 +57,12 @@ cmp "$out/base/verify/oracle_sql.json" "$out/work/verify/oracle_sql.json" \
 echo "== precheck (worktree)"
 python3 "$repo/tools/precheck.py" "$data/sf0.01" "$out/work/verify" | tail -n 3 \
   || status=1
+echo "== cache warnings (worktree PlanDump + Verify log)"
+for w in "Asked to cache already cached data" \
+  "already exists on this machine; not re-adding it"; do
+  n=$(grep -c -F "$w" "$out/work/run.log" || true)
+  echo "$n  $w"
+  [ "$n" -eq 0 ] || status=1
+done
 echo "results in $out"
 exit $status
