@@ -18,12 +18,11 @@ import org.apache.spark.sql.functions._
   *
   * Layout under one root (generation dirs + an atomic manifest
   * pointer; every mutation is CRASH-SAFE and readers see exactly
-  * old-or-new, never a partial — the [[RegistryStore]] protocol):
-  *  - `<root>/_manifests/v<NNNNN>.txt`: versioned manifests; the
-  *    highest version is live. Lines: `model G` (the generation
-  *    holding the FROZEN one-row model: coarse centroids cmodel/cflat
-  *    + residual codebook rmodel/rflat) and `codes G1 G2 …` (the LSM
-  *    levels of encoded index rows).
+  * old-or-new, never a partial — the [[Generations]] protocol):
+  *  - the versioned manifests; the highest version is live. Lines:
+  *    `model G` (the generation holding the FROZEN one-row model:
+  *    coarse centroids cmodel/cflat + residual codebook rmodel/rflat)
+  *    and `codes G1 G2 …` (the LSM levels of encoded index rows).
   *  - `<root>/model_g<NNNNN>`: the one-row model parquet.
   *  - `<root>/codes_g<NNNNN>/cid=K/`: index rows (vec_id, codes)
   *    PARTITIONED BY the coarse cell — a probe's scan touches exactly
@@ -45,97 +44,41 @@ import org.apache.spark.sql.functions._
   * (the x83 audit shape) and pins the in-distribution case; re-train
   * when the audit says so, not nightly.
   *
-  * Writer concurrency, commit protocol, reaping: exactly
-  * [[RegistryStore]]'s (single-writer scheduler; losers lose loudly;
-  * append retries reference the already-staged generation; compact
-  * retries carry concurrently-appended deltas; readers keep their
-  * snapshot for [[ReapKeepVersions]] commits). */
+  * Writer concurrency, commit protocol, reaping: [[Generations]]
+  * (single-writer scheduler; losers lose loudly; append retries
+  * reference the already-staged generation; compact retries carry
+  * concurrently-appended deltas, as [[RegistryStore.compact]]'s do). */
 object AnnStore {
 
-  private val ReapKeepVersions = 2
-
+  /** Lines: `model G` (the one model generation) and `codes G1 G2 …`. */
   private[graft] case class Manifest(version: Int, model: Int,
                                      codes: Seq[Int])
+      extends Generations.Manifest {
+    def lines: Seq[String] = Seq(s"model $model", codes.mkString("codes ", " ", ""))
+    def refs: Map[String, Seq[Int]] = Map("model" -> Seq(model), "codes" -> codes)
+  }
+
+  private val Gens = new Generations[Manifest](Seq("model", "codes"), { (v, lines) =>
+    var model = -1
+    var codes = Seq.empty[Int]
+    lines.foreach {
+      case "model" +: g +: _ => model = g.toInt
+      case "codes" +: gens => codes = gens.map(_.toInt)
+      case _ => // version header / unknown line: ignore
+    }
+    require(model >= 0, s"manifest v$v names no model generation")
+    Manifest(v, model, codes)
+  })
 
   private def fsOf(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def modelDir(root: String, g: Int): String = f"$root/model_g$g%05d"
-  private def codesDir(root: String, g: Int): String = f"$root/codes_g$g%05d"
-
-  // ---------------------------------------------------------- manifest io
-  private def manifestDir(root: String) = new Path(s"$root/_manifests")
-
-  private def manifestVersions(fs: FileSystem, root: String): Seq[Int] = {
-    val dir = manifestDir(root)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".txt"))
-      .flatMap(n => n.stripPrefix("v").stripSuffix(".txt").toIntOption)
-      .sorted
-  }
+  private def modelDir(root: String, g: Int): String = Gens.dir(root, "model", g)
+  private def codesDir(root: String, g: Int): String = Gens.dir(root, "codes", g)
 
   private[graft] def currentManifest(spark: SparkSession,
-                                     root: String): Manifest = {
-    val fs = fsOf(spark, root)
-    val v = manifestVersions(fs, root).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $root"))
-    readManifest(fs, root, v)
-  }
-
-  private def readManifest(fs: FileSystem, root: String, v: Int): Manifest = {
-    val in = fs.open(new Path(manifestDir(root), f"v$v%05d.txt"))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    var model = -1
-    var codes = Seq.empty[Int]
-    text.linesIterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-      line.split("\\s+").toSeq match {
-        case "model" +: g +: _ => model = g.toInt
-        case "codes" +: gens => codes = gens.map(_.toInt)
-        case _ => // version header / unknown line: ignore
-      }
-    }
-    require(model >= 0, s"manifest v$v under $root names no model generation")
-    Manifest(v, model, codes)
-  }
-
-  /** Atomic commit: body to a PER-ATTEMPT tmp (nonce suffix — see
-    * [[RegistryStore.commitManifestImpl]]'s race note), ONE rename to
-    * the fresh final name; rename-to-existing loses loudly. */
-  private[graft] def commitManifest(fs: FileSystem, root: String,
-                                    m: Manifest): Unit = {
-    val dir = manifestDir(root)
-    fs.mkdirs(dir)
-    val body = s"v${m.version}\nmodel ${m.model}\n" +
-      m.codes.mkString("codes ", " ", "\n")
-    val nonce = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = new Path(dir, f".tmp_v${m.version}%05d_$nonce")
-    val out = fs.create(tmp, false)
-    try {
-      out.write(body.getBytes("UTF-8"))
-      try out.hsync() catch { case _: UnsupportedOperationException => () }
-    } finally out.close()
-    val fin = new Path(dir, f"v${m.version}%05d.txt")
-    if (fs.exists(fin) || !fs.rename(tmp, fin)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"manifest commit lost the race for $fin (single-writer violated)")
-    }
-  }
-
-  private[graft] def nextGen(fs: FileSystem, root: String): Int = {
-    val onDisk =
-      if (!fs.exists(new Path(root))) Seq.empty
-      else fs.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
-        .collect {
-          case n if n.startsWith("model_g") =>
-            n.stripPrefix("model_g").toIntOption
-          case n if n.startsWith("codes_g") =>
-            n.stripPrefix("codes_g").toIntOption
-        }.flatten
-    (0 +: onDisk).max + 1
-  }
+                                     root: String): Manifest =
+    Gens.current(fsOf(spark, root), root)
 
   // ------------------------------------------------------------- writes
   /** Build (or fully REBUILD) the index at `root` from (vec_id, qv)
@@ -150,7 +93,7 @@ object AnnStore {
   def build(v: DataFrame, root: String): Unit = {
     val spark = v.sparkSession
     val fs = fsOf(spark, root)
-    val prior = manifestVersions(fs, root).lastOption
+    val prior = Gens.versions(fs, root).lastOption
     val E = graft.queries.Extensions
     // the Lloyd seeding convention needs a dense 0..max(√n,k)−1 id
     // prefix — on anything else the trained codebook corrupts
@@ -165,15 +108,15 @@ object AnnStore {
       // assignment output measured slower than re-encoding)
       val assigned = E.ivfPqAssign(v, cents)
       val rcb = Cached.fill(E.ivfPqCodebook(assigned))
-      val g = nextGen(fs, root)
+      val g = Gens.nextGen(fs, root)
       cents.crossJoin(rcb).write.parquet(modelDir(root, g))
       E.ivfPqEncodeDf(assigned, rcb)
         .select(col("vec_id"), col("codes"), col("cid"))
         .write.partitionBy("cid").parquet(codesDir(root, g))
       g
     }
-    commitManifest(fs, root, Manifest(prior.getOrElse(0) + 1, g, Seq(g)))
-    if (prior.nonEmpty) reapStaleGens(spark, root)
+    Gens.commit(fs, root, Manifest(prior.getOrElse(0) + 1, g, Seq(g)))
+    if (prior.nonEmpty) Gens.reap(fs, root)
   }
 
   /** Append a delta of (vec_id, qv) rows to the live index: encode
@@ -181,7 +124,7 @@ object AnnStore {
     * a stateless projection over the broadcast model row; no
     * re-training, no history rescan, cost ∝ delta), stage into a
     * fresh codes generation, commit with collision retry (the
-    * [[RegistryStore.appendRetrying]] protocol: staged data is never
+    * [[Generations.commitRetrying]] loop: staged data is never
     * rewritten; a re-read manifest already referencing the staged
     * generation stops the retry). */
   def append(delta: DataFrame, root: String, maxAttempts: Int = 5): Unit =
@@ -190,34 +133,19 @@ object AnnStore {
   /** Test seam: `beforeCommit` runs before each commit attempt. */
   private[graft] def appendImpl(delta: DataFrame, root: String,
       maxAttempts: Int, beforeCommit: () => Unit): Unit = {
-    require(maxAttempts >= 1, "maxAttempts >= 1")
     val spark = delta.sparkSession
     val fs = fsOf(spark, root)
     val E = graft.queries.Extensions
     val model = readModel(spark, root)
     val assigned = E.ivfPqAssign(delta,
       model.select(col("cmodel"), col("cflat")))
-    val g = nextGen(fs, root)
+    val g = Gens.nextGen(fs, root)
     E.ivfPqEncodeDf(assigned, model.select(col("rmodel"), col("rflat")))
       .select(col("vec_id"), col("codes"), col("cid"))
       .write.partitionBy("cid").parquet(codesDir(root, g))
-    var attempt = 1
-    var committed = false
-    while (!committed) {
-      val m = currentManifest(spark, root)
-      if (m.codes.contains(g)) { committed = true }
-      else {
-        beforeCommit()
-        try {
-          commitManifest(fs, root,
-            Manifest(m.version + 1, m.model, m.codes :+ g))
-          committed = true
-        } catch {
-          case e: IllegalStateException =>
-            if (attempt >= maxAttempts) throw e
-            attempt += 1 // lost the race: re-read the manifest and retry
-        }
-      }
+    Gens.commitRetrying(fs, root, maxAttempts, beforeCommit) { m =>
+      if (m.codes.contains(g)) None
+      else Some(Manifest(m.version + 1, m.model, m.codes :+ g))
     }
   }
 
@@ -249,82 +177,22 @@ object AnnStore {
 
   private[graft] def compactImpl(spark: SparkSession, root: String,
       reap: Boolean, maxAttempts: Int, beforeCommit: () => Unit): Unit = {
-    require(maxAttempts >= 1, "maxAttempts >= 1")
     val fs = fsOf(spark, root)
-    val m = currentManifest(spark, root)
-    val g = nextGen(fs, root)
+    val m = Gens.current(fs, root)
+    val g = Gens.nextGen(fs, root)
     // snapshot-consistent fold of exactly the generations we saw
     m.codes.map(gi => spark.read.parquet(codesDir(root, gi)))
       .reduce(_ unionByName _)
       .select(col("vec_id"), col("codes"), col("cid"))
       .write.partitionBy("cid").parquet(codesDir(root, g))
-    var attempt = 1
-    var committed = false
-    while (!committed) {
-      val live = currentManifest(spark, root)
+    Gens.commitRetrying(fs, root, maxAttempts, beforeCommit) { live =>
       if (!live.codes.startsWith(m.codes) || live.codes.contains(g) ||
           live.model != m.model)
         throw new IllegalStateException(
           s"concurrent compaction/rebuild detected under $root: live " +
           s"$live does not extend snapshot $m")
-      val extras = live.codes.drop(m.codes.length)
-      beforeCommit()
-      try {
-        commitManifest(fs, root,
-          Manifest(live.version + 1, m.model, g +: extras))
-        committed = true
-      } catch {
-        case e: IllegalStateException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      Some(Manifest(live.version + 1, m.model, g +: live.codes.drop(m.codes.length)))
     }
-    if (reap) reapStaleGens(spark, root)
-  }
-
-  /** Post-commit GC, the [[RegistryStore.reapStaleGens]] policy:
-    * delete generations unreferenced by the latest
-    * [[ReapKeepVersions]] manifests with ids below the newest
-    * committed generation, stale manifest versions, and covered
-    * crashed-commit tmp files. Idempotent. */
-  private[graft] def reapStaleGens(spark: SparkSession, root: String): Unit = {
-    val fs = fsOf(spark, root)
-    val versions = manifestVersions(fs, root)
-    val kept = versions.takeRight(ReapKeepVersions)
-    val manifests = kept.map(readManifest(fs, root, _))
-    // liveness is PER KIND: the model generation typically outlives
-    // every codes generation (appends/compacts carry it by
-    // reference), and a shared id-based set would let model_gN keep
-    // an unreferenced codes_gN alive forever
-    val liveModel: Set[Int] = manifests.map(_.model).toSet
-    val liveCodes: Set[Int] = manifests.flatMap(_.codes).toSet
-    val all = liveModel ++ liveCodes
-    val ceiling = if (all.isEmpty) 0 else all.max
-    if (fs.exists(new Path(root))) {
-      fs.listStatus(new Path(root)).foreach { st =>
-        val n = st.getPath.getName
-        val dead =
-          if (n.startsWith("model_g"))
-            n.stripPrefix("model_g").toIntOption
-              .exists(id => !liveModel.contains(id) && id < ceiling)
-          else if (n.startsWith("codes_g"))
-            n.stripPrefix("codes_g").toIntOption
-              .exists(id => !liveCodes.contains(id) && id < ceiling)
-          else false
-        if (dead) fs.delete(st.getPath, true)
-      }
-    }
-    versions.dropRight(ReapKeepVersions).foreach(v =>
-      fs.delete(new Path(manifestDir(root), f"v$v%05d.txt"), false))
-    versions.lastOption.foreach { latest =>
-      val dir = manifestDir(root)
-      if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(".tmp_v"))
-          n.stripPrefix(".tmp_v").takeWhile(_.isDigit).toIntOption.foreach { v =>
-            if (v <= latest) fs.delete(st.getPath, false)
-          }
-      }
-    }
+    if (reap) Gens.reap(fs, root)
   }
 }

@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * Layout under one root (round 13: generation dirs + an atomic
   * manifest pointer — every mutation is CRASH-SAFE and readers see
-  * exactly old-or-new, never a partial):
-  *  - `<root>/_manifests/v<NNNNN>.txt`: versioned manifests; the
-  *    highest version is the live one. A manifest names, per
-  *    component, the generation dirs that hold its data:
+  * exactly old-or-new, never a partial — the [[Generations]] protocol):
+  *  - the versioned manifests; the highest version is the live one. A
+  *    manifest names, per component, the generation dirs that hold its
+  *    data:
   *    `classes` → a list of class generations (the LSM levels),
   *    `band K` → the generations holding band K's index files.
   *  - `<root>/classes_g<NNNNN>`: class rows `(sig, cnt, min_id,
@@ -31,32 +31,11 @@ import org.apache.spark.sql.functions._
   *    files by parquet footer min/max (the ZOrderPruneSpec
   *    statistic, proven from real footers).
   *
-  * Commit protocol (the Iceberg/Delta move, RegistryStoreSpec pins
-  * each property):
-  *  1. every write lands in a FRESH generation dir no manifest
-  *     references — invisible to all readers;
-  *  2. the commit is ONE atomic `rename` of the next manifest
-  *     version into `_manifests/` (rename-to-fresh-path is atomic on
-  *     HDFS and POSIX; no manifest file is ever overwritten);
-  *  3. stale generations are reaped only AFTER the commit, and only
-  *     those unreferenced by the latest [[ReapKeepVersions]] manifest
-  *     versions — an in-flight reader that resolved the previous
-  *     manifest keeps its files until two further commits land.
-  * A crash before (2) leaves orphan generation dirs the next
-  * `compact` reaps — readers never see them; a crash after (2)
-  * leaves stale-but-unreferenced generations — readers already see
-  * the new state. At NO instant is the store unreadable.
-  *
-  * Writer concurrency is single-writer (the maintenance scheduler's
-  * job, as in Delta without a commit service); the protocol protects
-  * READERS against a concurrent writer and the store against a
-  * writer crash at any point. A double-fired writer LOSES LOUDLY:
-  * the second commit of the same manifest version throws at the
-  * atomic rename (existence-guarded on stores whose rename
-  * overwrites), the live manifest is untouched, and the loser's
-  * staged generation is reclaimed as an ordinary orphan —
-  * RegistryStoreSpec drives an append racing an append and an append
-  * racing a compact.
+  * Every mutation follows the store protocol of [[Generations]]
+  * (fresh generation dirs, one atomic manifest rename, a reap under a
+  * two-version reader window; single writer, and a double-fired writer
+  * loses loudly). RegistryStoreSpec drives an append racing an append
+  * and an append racing a compact.
   *
   * At 100 TB the registry is the piece that must NOT be rescanned
   * per day: the delta's probe reads only the band partitions (1/4 of
@@ -67,10 +46,6 @@ import org.apache.spark.sql.functions._
   * rewrite whose unit is a band partition, never the table. */
 object RegistryStore {
 
-  /** Reader protection window: generations referenced by this many
-    * latest manifest versions survive reaping. */
-  private val ReapKeepVersions = 2
-
   /** Upper bound on any concurrent fold/write await — generous (a
     * fold is one band partition or the classes merge, never the
     * table), but finite: a hung job must surface as a timeout, not
@@ -79,126 +54,52 @@ object RegistryStore {
     scala.concurrent.duration.Duration(6, java.util.concurrent.TimeUnit.HOURS)
 
   /** The live file inventory: which generations hold the classes LSM
-    * levels and each band's index files. */
+    * levels and each band's index files. Lines: `classes G1 G2 …`, then
+    * `band K G1 G2 …` per band in band order. */
   private[graft] case class Manifest(version: Int, classes: Seq[Int],
                                      bands: Map[Int, Seq[Int]])
+      extends Generations.Manifest {
+    def lines: Seq[String] = classes.mkString("classes ", " ", "") +:
+      bands.toSeq.sortBy(_._1).map { case (k, gens) => gens.mkString(s"band $k ", " ", "") }
+    def refs: Map[String, Seq[Int]] =
+      Map("classes" -> classes, "bands" -> bands.values.flatten.toSeq)
+  }
+
+  private val Gens = new Generations[Manifest](Seq("classes", "bands"), { (v, lines) =>
+    var classes = Seq.empty[Int]
+    var bands = Map.empty[Int, Seq[Int]]
+    lines.foreach {
+      case "classes" +: gens => classes = gens.map(_.toInt)
+      case "band" +: k +: gens => bands += (k.toInt -> gens.map(_.toInt))
+      case _ => // version header / unknown line: ignore
+    }
+    Manifest(v, classes, bands)
+  })
 
   private def fsOf(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def classesDir(root: String, g: Int): String =
-    f"$root/classes_g$g%05d"
-  private def bandsDir(root: String, g: Int): String =
-    f"$root/bands_g$g%05d"
-
-  // ---------------------------------------------------------- manifest io
-  private def manifestDir(root: String) = new Path(s"$root/_manifests")
-
-  private def manifestVersions(fs: FileSystem, root: String): Seq[Int] = {
-    val dir = manifestDir(root)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".txt"))
-      .flatMap(n => n.stripPrefix("v").stripSuffix(".txt").toIntOption)
-      .sorted
-  }
+  private def classesDir(root: String, g: Int): String = Gens.dir(root, "classes", g)
+  private def bandsDir(root: String, g: Int): String = Gens.dir(root, "bands", g)
 
   /** The live manifest = highest committed version. */
   private[graft] def currentManifest(spark: SparkSession,
-                                     root: String): Manifest = {
-    val fs = fsOf(spark, root)
-    val v = manifestVersions(fs, root).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $root"))
-    readManifest(fs, root, v)
-  }
+                                     root: String): Manifest =
+    Gens.current(fsOf(spark, root), root)
 
-  private def readManifest(fs: FileSystem, root: String, v: Int): Manifest = {
-    val in = fs.open(new Path(manifestDir(root), f"v$v%05d.txt"))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    var classes = Seq.empty[Int]
-    var bands = Map.empty[Int, Seq[Int]]
-    text.linesIterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-      line.split("\\s+").toSeq match {
-        case "classes" +: gens => classes = gens.map(_.toInt)
-        case "band" +: k +: gens => bands += (k.toInt -> gens.map(_.toInt))
-        case _ => // version header / unknown line: ignore
-      }
-    }
-    Manifest(v, classes, bands)
-  }
-
-  /** Atomic commit: write the next version to a dot-tmp file, then
-    * ONE rename to its final (fresh, never-overwritten) name.
-    * (private[graft] so RegistryStoreSpec can drive the concurrent-
-    * writer race at exactly this boundary.) */
+  /** The [[Generations.commit]] of `m` (private[graft] so
+    * RegistryStoreSpec can drive the concurrent-writer race at exactly
+    * this boundary). */
   private[graft] def commitManifest(fs: FileSystem, root: String,
-                                    m: Manifest): Unit =
-    commitManifestImpl(fs, root, m, () => ())
+                                    m: Manifest): Unit = Gens.commit(fs, root, m)
 
-  /** Test seam: `beforeRename` runs after the tmp body is durable and
-    * before the atomic rename, so a spec can land a full concurrent
-    * commit of the SAME version inside the publish window. */
   private[graft] def commitManifestImpl(fs: FileSystem, root: String,
                                         m: Manifest,
-                                        beforeRename: () => Unit): Unit = {
-    val dir = manifestDir(root)
-    fs.mkdirs(dir)
-    val body = new StringBuilder(s"v${m.version}\n")
-    body ++= m.classes.mkString("classes ", " ", "\n")
-    m.bands.toSeq.sortBy(_._1).foreach { case (k, gens) =>
-      body ++= gens.mkString(s"band $k ", " ", "\n")
-    }
-    // The tmp name is unique PER ATTEMPT, not per version: two writers
-    // committing the same next version must never share a staging
-    // path, or writer B's create(overwrite=true) replaces A's staged
-    // body and A's rename publishes B's manifest under A's success —
-    // A's generation is silently lost and B's retry then re-appends a
-    // generation the live manifest already references (double count).
-    // With a nonce the interleave is structurally impossible: each
-    // writer renames only bytes it wrote itself, and exactly one
-    // rename to the (fresh, never-overwritten) final name wins.
-    val nonce = java.util.UUID.randomUUID.toString.take(8)
-    val tmp = new Path(dir, f".tmp_v${m.version}%05d_$nonce")
-    val out = fs.create(tmp, false)
-    try {
-      out.write(body.toString.getBytes("UTF-8"))
-      // durability fence where the FS supports it (HDFS/object stores);
-      // the local checksum FS is not Syncable — close() flushes there
-      try out.hsync() catch { case _: UnsupportedOperationException => () }
-    } finally out.close()
-    beforeRename()
-    val fin = new Path(dir, f"v${m.version}%05d.txt")
-    // Concurrent-writer guard: on HDFS/object stores rename-to-
-    // existing FAILS atomically (the protocol's backbone); POSIX
-    // local rename silently REPLACES, so the existence check makes a
-    // lost race fail loudly there too (check-then-rename narrows but
-    // cannot close the window on such stores — single-writer remains
-    // the documented contract, this guard turns a double-fired
-    // scheduler into an exception instead of silent last-writer-wins;
-    // RegistryStoreSpec drives both race shapes).
-    if (fs.exists(fin) || !fs.rename(tmp, fin)) {
-      fs.delete(tmp, false) // the loser reclaims its own staging file
-      throw new IllegalStateException(
-        s"manifest commit lost the race for $fin (single-writer violated)")
-    }
-  }
+                                        beforeRename: () => Unit): Unit =
+    Gens.commit(fs, root, m, beforeRename)
 
-  /** Next unused generation id: one past every id any manifest
-    * references or any on-disk dir carries (crashed writers leave
-    * dirs without manifest entries — their ids stay burned). */
-  private[graft] def nextGen(fs: FileSystem, root: String): Int = {
-    val onDisk =
-      if (!fs.exists(new Path(root))) Seq.empty
-      else fs.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
-        .collect {
-          case n if n.startsWith("classes_g") =>
-            n.stripPrefix("classes_g").toIntOption
-          case n if n.startsWith("bands_g") =>
-            n.stripPrefix("bands_g").toIntOption
-        }.flatten
-    (0 +: onDisk).max + 1
-  }
+  private[graft] def nextGen(fs: FileSystem, root: String): Int =
+    Gens.nextGen(fs, root)
 
   // ------------------------------------------------------------- writes
   /** Write a class registry (sig, cnt, min_id, arr) as a store at
@@ -217,13 +118,13 @@ object RegistryStore {
   def write(classes: DataFrame, root: String, filesPerBand: Int = 1): Unit = {
     val spark = classes.sparkSession
     val fs = fsOf(spark, root)
-    val prior = manifestVersions(fs, root).lastOption
-    val g = nextGen(fs, root)
+    val prior = Gens.versions(fs, root).lastOption
+    val g = Gens.nextGen(fs, root)
     stageGeneration(classes, root, g, filesPerBand)
-    commitManifest(fs, root,
+    Gens.commit(fs, root,
       Manifest(prior.getOrElse(0) + 1, Seq(g),
         bandsIn(fs, root, g).map(_ -> Seq(g)).toMap))
-    if (prior.nonEmpty) reapStaleGens(spark, root)
+    if (prior.nonEmpty) Gens.reap(fs, root)
   }
 
   /** Append one day's ALREADY-CLASSED delta (a
@@ -235,76 +136,41 @@ object RegistryStore {
     * appended files in place, so a concurrent reader could). Read-
     * time merge makes the result equal
     * [[graft.queries.Extensions.appendRegistry]] over the same days
-    * (RegistryStoreSpec pins the equality). */
+    * (RegistryStoreSpec pins the equality).
+    *
+    * The delta's data stages into its generation ONCE; a commit that
+    * loses a race (a double-fired scheduler) re-reads the live
+    * manifest and retries referencing the already-staged generation
+    * ([[Generations.commitRetrying]]), and a live manifest that already
+    * references it ends the append. The outcome equals the two appends
+    * running sequentially (the read-time sig-merge is associative, so
+    * generation order is immaterial; RegistryStoreSpec pins the
+    * equality under an injected mid-flight concurrent append). Scope:
+    * the retry covers the COMMIT window; two writers whose STAGING
+    * overlaps so tightly that they pick the same generation id still
+    * fail loudly at the parquet write (SaveMode.ErrorIfExists) and the
+    * caller re-runs the whole append. Rethrows the last collision
+    * after `maxAttempts` losses. */
   def append(deltaClasses: DataFrame, root: String,
-             filesPerBand: Int = 1): Unit = {
-    val spark = deltaClasses.sparkSession
-    val fs = fsOf(spark, root)
-    val m = currentManifest(spark, root)
-    val g = nextGen(fs, root)
-    stageGeneration(deltaClasses, root, g, filesPerBand)
-    val bands = bandsIn(fs, root, g).foldLeft(m.bands) { (acc, k) =>
-      acc + (k -> (acc.getOrElse(k, Seq.empty) :+ g))
-    }
-    commitManifest(fs, root, Manifest(m.version + 1, m.classes :+ g, bands))
-  }
-
-  /** [[append]] with commit-collision RETRY — the daily-crawl answer
-    * to a double-fired scheduler. The delta's data stages into its
-    * generation ONCE; if the manifest commit then loses a race
-    * (another writer committed the same next version first), the
-    * live manifest is re-read and the commit retried referencing the
-    * already-staged generation — data is never rewritten, and the
-    * outcome equals the two appends running sequentially (the
-    * read-time sig-merge is associative, so generation order is
-    * immaterial; RegistryStoreSpec pins the equality under an
-    * injected mid-flight concurrent append). Scope: the retry covers
-    * the COMMIT window; two writers whose STAGING overlaps so tightly
-    * that they pick the same generation id still fail loudly at the
-    * parquet write (SaveMode.ErrorIfExists) and the caller re-runs
-    * the whole append — single-writer remains the recommended
-    * schedule, this makes the occasional double-fire self-heal.
-    * Rethrows the last collision after `maxAttempts` losses. */
-  def appendRetrying(deltaClasses: DataFrame, root: String,
-      filesPerBand: Int = 1, maxAttempts: Int = 5): Unit =
-    appendRetryingImpl(deltaClasses, root, filesPerBand, maxAttempts, () => ())
+             filesPerBand: Int = 1, maxAttempts: Int = 5): Unit =
+    appendImpl(deltaClasses, root, filesPerBand, maxAttempts, () => ())
 
   /** Test seam: `beforeCommit` runs before each commit attempt so a
     * spec can inject a concurrent writer inside the commit window. */
-  private[graft] def appendRetryingImpl(deltaClasses: DataFrame,
+  private[graft] def appendImpl(deltaClasses: DataFrame,
       root: String, filesPerBand: Int, maxAttempts: Int,
       beforeCommit: () => Unit): Unit = {
-    require(maxAttempts >= 1, "maxAttempts >= 1")
-    val spark = deltaClasses.sparkSession
-    val fs = fsOf(spark, root)
-    val g = nextGen(fs, root)
+    val fs = fsOf(deltaClasses.sparkSession, root)
+    Gens.current(fs, root) // no store under root: fail before staging
+    val g = Gens.nextGen(fs, root)
     stageGeneration(deltaClasses, root, g, filesPerBand)
-    var attempt = 1
-    var committed = false
-    while (!committed) {
-      val m = currentManifest(spark, root)
-      // Double-publish guard: if the re-read live manifest ALREADY
-      // references our staged generation, some commit carrying g won
-      // (e.g. a racing writer folded our generation in, or our own
-      // earlier attempt's rename landed after its error surfaced) —
-      // committing again would reference g twice and double-count
-      // every sig in readClasses. The append is done; stop.
-      if (m.classes.contains(g)) { committed = true }
-      else {
-        val bands = bandsIn(fs, root, g).foldLeft(m.bands) { (acc, k) =>
+    val staged = bandsIn(fs, root, g)
+    Gens.commitRetrying(fs, root, maxAttempts, beforeCommit) { m =>
+      if (m.classes.contains(g)) None
+      else Some(Manifest(m.version + 1, m.classes :+ g,
+        staged.foldLeft(m.bands) { (acc, k) =>
           acc + (k -> (acc.getOrElse(k, Seq.empty) :+ g))
-        }
-        beforeCommit()
-        try {
-          commitManifest(fs, root,
-            Manifest(m.version + 1, m.classes :+ g, bands))
-          committed = true
-        } catch {
-          case e: IllegalStateException =>
-            if (attempt >= maxAttempts) throw e
-            attempt += 1 // lost the race: re-read the manifest and retry
-        }
-      }
+        }))
     }
   }
 
@@ -434,15 +300,15 @@ object RegistryStore {
     * independently); a band already at one file is carried by
     * manifest reference, its bytes untouched. All folded output
     * lands in a fresh generation and goes live in ONE atomic
-    * manifest commit (see the object doc's crash-safety protocol);
-    * generations the last [[ReapKeepVersions]] manifests no longer
-    * reference are reaped after the commit. Readback equality,
-    * post-compaction pruning, old-or-new reader isolation and
-    * crash-window readability are pinned by RegistryStoreSpec; x95
-    * stays hash-green reading a compacted store.
-    * Commit-collision RETRY (the [[appendRetrying]] move for the
-    * compactor): the fold stages into its generation ONCE against a
-    * manifest SNAPSHOT; if the commit then loses to a concurrent
+    * manifest commit ([[Generations]]); generations the last
+    * [[Generations.KeepVersions]] manifests no longer reference are
+    * reaped after the commit. Readback equality, post-compaction
+    * pruning, old-or-new reader isolation and crash-window
+    * readability are pinned by RegistryStoreSpec; x95 stays
+    * hash-green reading a compacted store.
+    * Commit-collision RETRY (the [[append]] move for the compactor):
+    * the fold stages into its generation ONCE against a manifest
+    * SNAPSHOT; if the commit then loses to a concurrent
     * append, the live manifest is re-read and — because an append
     * only ever EXTENDS the snapshot's generation list — the commit is
     * retried referencing the fold PLUS the appended deltas, which the
@@ -461,73 +327,50 @@ object RegistryStore {
   private[graft] def compactImpl(spark: SparkSession, root: String,
       targetBytes: Long, reap: Boolean, maxAttempts: Int,
       beforeCommit: () => Unit): Unit = {
-    require(maxAttempts >= 1, "maxAttempts >= 1")
     val fs = fsOf(spark, root)
-    val m = currentManifest(spark, root)
-    val g = nextGen(fs, root)
+    val m = Gens.current(fs, root)
+    val g = Gens.nextGen(fs, root)
     // The classes LSM fold and each band's fold are INDEPENDENT jobs
     // writing to disjoint paths, and each is small (a band partition,
-    // never the table) — run them from a bounded thread pool so one
-    // fold's task tail back-fills with the next fold's tasks instead
-    // of leaving the cluster idle (optimization-guide §2.6; round-15:
-    // the sequential loop ran 1 + |bands| small jobs end to end).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, m.bands.size + 1))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val bands = try {
-      // classes LSM fold: materialize the read-time merge once — over
-      // exactly the snapshot's generations (see readClassesOf)
-      val classesF = scala.concurrent.Future {
-        spark.sparkContext.setJobDescription(s"compact classes fold g=$g")
-        readClassesOf(spark, root, m).write.parquet(classesDir(root, g))
-      }
-      // per-band fold of multi-file bands into the fresh generation
-      val bandFs = m.bands.toSeq.map { case (k, gens) =>
-        scala.concurrent.Future {
-          spark.sparkContext.setJobDescription(s"compact fold band=$k g=$g")
-          val files = gens.flatMap(gi =>
-            listParquet(spark, s"${bandsDir(root, gi)}/band=$k"))
-          if (files.length > 1) {
-            // sorted-fill fast path: when every file fits one bin by
-            // total size, the planner provably emits a single bin —
-            // skip the (driver-round-trip) planning job and only run
-            // x82's planner when the outcome could differ
-            val nOut = if (files.map(_.getLen).sum <= targetBytes) 1
-            else {
-              val inv = spark.createDataFrame(files.map(f =>
-                (f.getPath.toString, f.getLen))).toDF("file_id", "bytes")
-              graft.queries.Extensions
-                .compactionPlan(inv, targetBytes)
-                .select(col("bin")).distinct().count().toInt
-            }
-            spark.read.parquet(files.map(_.getPath.toString): _*)
-              .repartitionByRange(nOut, col("k0"))
-              .sortWithinPartitions(col("k0"))
-              .write.parquet(s"${bandsDir(root, g)}/band=$k")
-            k -> Seq(g)
-          } else k -> gens
+    // never the table) — run them concurrently so one fold's task tail
+    // back-fills with the next fold's tasks instead of leaving the
+    // cluster idle (optimization-guide §2.6; round-15: the sequential
+    // loop ran 1 + |bands| small jobs end to end).
+    // classes LSM fold: materialize the read-time merge once — over
+    // exactly the snapshot's generations (see readClassesOf)
+    val classesFold: () => Option[(Int, Seq[Int])] = () => {
+      spark.sparkContext.setJobDescription(s"compact classes fold g=$g")
+      readClassesOf(spark, root, m).write.parquet(classesDir(root, g))
+      None
+    }
+    // per-band fold of multi-file bands into the fresh generation
+    val bandFolds = m.bands.toSeq.map { case (k, gens) => () =>
+      spark.sparkContext.setJobDescription(s"compact fold band=$k g=$g")
+      val files = gens.flatMap(gi =>
+        listParquet(spark, s"${bandsDir(root, gi)}/band=$k"))
+      if (files.length > 1) {
+        // sorted-fill fast path: when every file fits one bin by
+        // total size, the planner provably emits a single bin —
+        // skip the (driver-round-trip) planning job and only run
+        // x82's planner when the outcome could differ
+        val nOut = if (files.map(_.getLen).sum <= targetBytes) 1
+        else {
+          val inv = spark.createDataFrame(files.map(f =>
+            (f.getPath.toString, f.getLen))).toDF("file_id", "bytes")
+          graft.queries.Extensions
+            .compactionPlan(inv, targetBytes)
+            .select(col("bin")).distinct().count().toInt
         }
-      }
-      // settle EVERY fold before propagating any failure — a failed
-      // band fold must not leave the classes write (or another band's
-      // write) in flight when the exception surfaces, or the orphan
-      // write races a later compact's reapStaleGens — and bound the
-      // wait (a hung fold previously blocked compact forever under
-      // Duration.Inf)
-      val bandTries = scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          bandFs.map(_.transform(scala.util.Success(_)))),
-        FoldTimeout)
-      val classesTry = scala.concurrent.Await.result(
-        classesF.transform(scala.util.Success(_)), FoldTimeout)
-      ((classesTry: scala.util.Try[Any]) +: bandTries).foreach(_.get)
-      bandTries.map(_.get).toMap
-    } finally drain(pool, root)
-    var attempt = 1
-    var committed = false
-    while (!committed) {
-      val live = currentManifest(spark, root)
+        spark.read.parquet(files.map(_.getPath.toString): _*)
+          .repartitionByRange(nOut, col("k0"))
+          .sortWithinPartitions(col("k0"))
+          .write.parquet(s"${bandsDir(root, g)}/band=$k")
+        Some(k -> Seq(g))
+      } else Some(k -> gens)
+    }
+    val bands = settle(root, math.min(4, m.bands.size + 1))(
+      classesFold +: bandFolds).flatten.toMap
+    Gens.commitRetrying(fs, root, maxAttempts, beforeCommit) { live =>
       // Generations appended since our snapshot: an append commits
       // `classes :+ gDelta`, so the live list must EXTEND ours (and
       // never reference our staged g). Anything else means a foreign
@@ -544,76 +387,33 @@ object RegistryStore {
           live.bands.getOrElse(k, Seq.empty).filter(extras.contains)
         k -> (bands.getOrElse(k, Seq.empty) ++ extraGens)
       }.toMap
-      beforeCommit()
-      try {
-        commitManifest(fs, root,
-          Manifest(live.version + 1, g +: extras, mergedBands))
-        committed = true
-      } catch {
-        case e: IllegalStateException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1 // lost the race: re-read the manifest and retry
-      }
+      Some(Manifest(live.version + 1, g +: extras, mergedBands))
     }
-    if (reap) reapStaleGens(spark, root)
+    if (reap) Gens.reap(fs, root)
   }
 
-  /** Post-commit garbage collection: delete generation dirs (and
-    * manifest versions) unreferenced by the latest
-    * [[ReapKeepVersions]] manifests, with ids strictly below the
-    * newest committed generation — so an in-flight reader on the
-    * previous manifest keeps its files, and crashed writers' orphan
-    * generations (dirs with no manifest entry) get reclaimed.
-    * Idempotent; safe to run any time. */
-  private[graft] def reapStaleGens(spark: SparkSession, root: String): Unit = {
-    val fs = fsOf(spark, root)
-    val versions = manifestVersions(fs, root)
-    val kept = versions.takeRight(ReapKeepVersions)
-    val manifests = kept.map(readManifest(fs, root, _))
-    val live: Set[Int] = manifests
-      .flatMap(mm => mm.classes ++ mm.bands.values.flatten).toSet
-    val ceiling = if (live.isEmpty) 0 else live.max
-    if (fs.exists(new Path(root))) {
-      fs.listStatus(new Path(root)).foreach { st =>
-        val n = st.getPath.getName
-        val gid =
-          if (n.startsWith("classes_g")) n.stripPrefix("classes_g").toIntOption
-          else if (n.startsWith("bands_g")) n.stripPrefix("bands_g").toIntOption
-          else None
-        gid.foreach { id =>
-          if (!live.contains(id) && id < ceiling) fs.delete(st.getPath, true)
-        }
-      }
+  /** Runs `folds` on a pool of `threads` and returns their results in
+    * order. Every fold settles before any failure propagates (no write
+    * may still be in flight when the exception surfaces, or it races a
+    * later compact's reap), under [[FoldTimeout]] instead of
+    * Duration.Inf; the first failure in `folds` order is rethrown. The
+    * pool is then shut down; a write still running 60 s after that
+    * (the timeout path) is not cancelled but logged with the store
+    * root, because it can race a later compact's reap. */
+  private def settle[T](root: String, threads: Int)(folds: Seq[() => T]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    try scala.concurrent.Await.result(
+        scala.concurrent.Future.sequence(folds.map(f =>
+          scala.concurrent.Future(f()).transform(scala.util.Success(_)))),
+        FoldTimeout).map(_.get)
+    finally {
+      pool.shutdown()
+      if (!pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS))
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"RegistryStore $root: folds still running 60 s after shutdown")
     }
-    versions.dropRight(ReapKeepVersions).foreach(v =>
-      fs.delete(new Path(manifestDir(root), f"v$v%05d.txt"), false))
-    // a writer crash between fs.create(tmp) and the rename strands a
-    // .tmp_v* file; reclaim any whose version a committed manifest
-    // already covers (a live writer's in-flight tmp is always at
-    // version latest+1, so it survives)
-    versions.lastOption.foreach { latest =>
-      val dir = manifestDir(root)
-      if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(".tmp_v"))
-          // name shape: .tmp_v<NNNNN>_<nonce> (nonce per attempt)
-          n.stripPrefix(".tmp_v").takeWhile(_.isDigit).toIntOption.foreach { v =>
-            if (v <= latest) fs.delete(st.getPath, false)
-          }
-      }
-    }
-  }
-
-  /** Shuts a fold pool down and waits for its writes. A write still
-    * running after 60 s (the [[FoldTimeout]] path) is not cancelled:
-    * it is logged with the store root, because it can race a later
-    * compact's reapStaleGens. */
-  private def drain(pool: java.util.concurrent.ExecutorService,
-      root: String): Unit = {
-    pool.shutdown()
-    if (!pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS))
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"RegistryStore $root: folds still running 60 s after shutdown")
   }
 
   /** Stage one generation's data files — the classes parquet plus the
@@ -647,31 +447,19 @@ object RegistryStore {
       // submit them concurrently so the classes write (a cache
       // read + encode + IO pass) back-fills the band side's
       // sampling/shuffle tail (guide §2.6, the compact-fold move).
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val cF = scala.concurrent.Future {
+      settle(root, 2)(Seq(
+        () => {
           spark.sparkContext.setJobDescription(s"stage classes g=$g")
           staged.write.parquet(classesDir(root, g))
-        }
-        val bF = scala.concurrent.Future {
+        },
+        () => {
           spark.sparkContext.setJobDescription(s"stage bands g=$g")
           bt.repartitionByRange(
               graft.ops.Banding.NumBands * filesPerBand,
               col("band"), col("k0"))
             .sortWithinPartitions(col("band"), col("k0"))
             .write.partitionBy("band").parquet(bandsDir(root, g))
-        }
-        // settle BOTH sinks before propagating any failure (no
-        // write may be left in flight when the exception surfaces),
-        // under a generous bound instead of Duration.Inf
-        val settled = scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(
-            Seq(cF, bF).map(_.transform(scala.util.Success(_)))),
-          FoldTimeout)
-        settled.foreach(_.get)
-      } finally drain(pool, root)
+        }))
     }
   }
 }

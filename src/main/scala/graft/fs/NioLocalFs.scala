@@ -2,7 +2,7 @@ package graft.fs
 
 import java.io.FileNotFoundException
 import java.net.URI
-import java.nio.file.{FileSystems, Files, LinkOption, NoSuchFileException}
+import java.nio.file.{FileSystemException, FileSystems, Files, LinkOption, NoSuchFileException}
 import java.nio.file.attribute.{FileTime, PosixFilePermissions, UserPrincipal}
 
 import org.apache.hadoop.conf.Configuration
@@ -36,11 +36,17 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def listStatus(f: Path): Array[FileStatus] =
     if (pathToFile(f).isDirectory) super.listStatus(f) else Array(getFileStatus(f))
 
-  /** The status of `f` from one `lstat`, or None when `f` is a symlink. */
+  /** The status of `f` from one `lstat`, or None when Hadoop's own call
+    * should answer: `f` is a symlink, or the `lstat` failed other than
+    * with ENOENT (a path under a plain file, ENOTDIR, is "does not exist"
+    * there). */
   private def status(f: Path): Option[FileStatus] = if (!unixView) None else {
     val file = pathToFile(f)
     val a = try Files.readAttributes(file.toPath, Attrs, LinkOption.NOFOLLOW_LINKS)
-      catch { case _: NoSuchFileException => throw new FileNotFoundException(s"File $f does not exist") }
+      catch {
+        case _: NoSuchFileException => throw new FileNotFoundException(s"File $f does not exist")
+        case _: FileSystemException => return None
+      }
     val mode = a.get("mode").asInstanceOf[Int]
     if ((mode & IfMt) == IfLnk) None
     else Some(new FileStatus(

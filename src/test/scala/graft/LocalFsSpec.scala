@@ -114,6 +114,18 @@ class LocalFsSpec extends AnyFunSuite {
     }
   }
 
+  test("a path under a plain file does not exist, as through Hadoop's local fs") {
+    withDir { d =>
+      val f = new Path(d, "f")
+      write(nioFs, f, "x")
+      val under = new Path(f, "_manifests")
+      assert(!stockFs().exists(under))
+      assert(!nioFs.exists(under))
+      intercept[FileNotFoundException](nioFs.getFileStatus(under))
+      intercept[FileNotFoundException](nioFc.getFileStatus(under))
+    }
+  }
+
   test("a symlink still reports isSymlink with its target") {
     withDir { d =>
       // Hadoop reads a link with `readlink` on the path's string, so only

@@ -294,6 +294,36 @@ class RegistryStoreSpec extends AnyFunSuite {
     d.unpersist()
   }
 
+  test("reap keeps a class generation only while a kept manifest's " +
+    "classes list references it, whatever bands it carries") {
+    // each compact folds the classes into a fresh generation but may
+    // carry single-file bands by reference from older ones
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_regstore_reapkind").toString
+    RegistryStore.write(graft.queries.Extensions.classesOf(docArrs), root)
+    for (_ <- 1 to 3) RegistryStore.compact(spark, root)
+    val kept = new java.io.File(s"$root/_manifests").listFiles().toSeq
+      .filter(_.getName.endsWith(".txt"))
+    assert(kept.length == 2, s"kept manifests: ${kept.map(_.getName)}")
+    val referenced = kept.flatMap { f =>
+      java.nio.file.Files.readAllLines(f.toPath).asScala
+        .filter(_.startsWith("classes "))
+        .flatMap(_.split(" ").toSeq.tail.map(g => f"classes_g${g.toInt}%05d"))
+    }.toSet
+    val onDisk = genDirs(root).filter(_.startsWith("classes_g"))
+    assert(onDisk.toSet.subsetOf(referenced),
+      s"unreferenced class generations survived: ${onDisk.filterNot(referenced)}")
+  }
+
+  test("append to a root that holds no store throws before staging") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_regstore_nostore").toString
+    intercept[IllegalStateException] {
+      RegistryStore.append(graft.queries.Extensions.classesOf(docArrs), root)
+    }
+    assert(genDirs(root).isEmpty, s"staged into a non-store: ${genDirs(root)}")
+  }
+
   test("rebuild over an existing store is crash-safe: staged-but-" +
     "uncommitted rebuild leaves the old store live; a committed one " +
     "supersedes it without a window of unreadability") {
@@ -415,7 +445,7 @@ class RegistryStoreSpec extends AnyFunSuite {
     // the manifest (now v2) and lands v3 referencing its already-
     // staged generation — no data is rewritten
     var injected = false
-    RegistryStore.appendRetryingImpl(
+    RegistryStore.appendImpl(
       graft.queries.Extensions.classesOf(dayA), root, 1, 5, () =>
         if (!injected) {
           injected = true
@@ -520,7 +550,7 @@ class RegistryStoreSpec extends AnyFunSuite {
     // hijacked fixed-tmp race produced): A's own commit then loses,
     // and the retry must detect g is live and NOT append it again
     var injected = false
-    RegistryStore.appendRetryingImpl(
+    RegistryStore.appendImpl(
       graft.queries.Extensions.classesOf(dayA), root, 1, 5, () =>
         if (!injected) {
           injected = true

@@ -15,6 +15,8 @@
 # re-adding it` (two consumers computed one persisted partition). Clean
 # diff + equal oracle SQL + "N ok, 0 fail" + both counts 0 means no gate
 # plan, oracle query or result moved and no cache was filled twice.
+# Last, it prints the gates whose PlanDump jobs/stages/tasks differ
+# between the two sides; that table is informational and sets no status.
 #
 # Environment: TESTDATA (default $HOME/testdata) holds sf0.001 and sf0.01;
 # SPARK_GRAFT_CPUS (default 4) and SPARK_DRIVER_MEM (default 4g) size the
@@ -64,5 +66,13 @@ for w in "Asked to cache already cached data" \
   echo "$n  $w"
   [ "$n" -eq 0 ] || status=1
 done
+echo "== PlanDump jobs/stages/tasks that differ ($base_rev vs worktree; informational)"
+# PlanDump's table rows: name min_s jobs stages tasks shufMB inMB
+counts() {
+  sed 's/^\[info\] //' "$1/run.log" \
+    | awk '$1 ~ /^[qx][0-9][0-9]_/ && NF == 7 && $3 ~ /^[0-9]+$/ {print $1, $3 "/" $4 "/" $5}' \
+    | LC_ALL=C sort
+}
+LC_ALL=C join <(counts "$out/base") <(counts "$out/work") | awk '$2 != $3 {print; n++} END {print n + 0, "gates differ"}'
 echo "results in $out"
 exit $status
