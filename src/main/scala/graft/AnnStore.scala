@@ -3,6 +3,7 @@ package graft
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** At-rest storage for the IVF-PQ index (x80's serving structure) —
   * the [[RegistryStore]] discipline applied to the vector side of the
@@ -43,6 +44,13 @@ import org.apache.spark.sql.functions._
   * of the appended index against a full rebuild on the union
   * (the x83 audit shape) and pins the in-distribution case; re-train
   * when the audit says so, not nightly.
+  *
+  * Reads start no schema-inference job: the model and codes reads
+  * pass the schema of the first generation, in manifest order, that
+  * holds a part file ([[Footers]]), the codes with the `cid` partition
+  * column appended as IntegerType. The store declares `cid` itself
+  * because an empty append leaves a codes generation without part
+  * files, which neither inference nor a data-only schema can resolve.
   *
   * Writer concurrency, commit protocol, reaping: [[Generations]]
   * (single-writer scheduler; losers lose loudly; append retries
@@ -152,17 +160,25 @@ object AnnStore {
   // -------------------------------------------------------------- reads
   /** The frozen one-row model (cmodel, cflat, rmodel, rflat) of the
     * live manifest. */
-  def readModel(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(modelDir(root, currentManifest(spark, root).model))
+  def readModel(spark: SparkSession, root: String): DataFrame = {
+    val dir = modelDir(root, currentManifest(spark, root).model)
+    spark.read.schema(Footers.schemaOf(spark, Seq(dir))).parquet(dir)
+  }
 
   /** The merged index view (vec_id, codes, cid) across the appended
     * generations. Filter on `cid` BEFORE joining probes: the filter
     * is a partition predicate on every generation's scan
     * (AnnStoreSpec proves the pruning from the physical plan). */
-  def readCodes(spark: SparkSession, root: String): DataFrame = {
-    val m = currentManifest(spark, root)
-    m.codes.map(g => spark.read.parquet(codesDir(root, g)))
-      .reduce(_ unionByName _)
+  def readCodes(spark: SparkSession, root: String): DataFrame =
+    codesOf(spark, root, currentManifest(spark, root))
+
+  /** The codes generations of `m`, each read with the schema of the
+    * first one that holds a part file plus the `cid` partition column:
+    * a generation an empty append left without files reads as empty. */
+  private def codesOf(spark: SparkSession, root: String, m: Manifest): DataFrame = {
+    val dirs = m.codes.map(codesDir(root, _))
+    val schema = Footers.schemaOf(spark, dirs).add("cid", IntegerType)
+    dirs.map(spark.read.schema(schema).parquet(_)).reduce(_ unionByName _)
   }
 
   /** Fold the accumulated codes generations into one (model carried
@@ -181,8 +197,7 @@ object AnnStore {
     val m = Gens.current(fs, root)
     val g = Gens.nextGen(fs, root)
     // snapshot-consistent fold of exactly the generations we saw
-    m.codes.map(gi => spark.read.parquet(codesDir(root, gi)))
-      .reduce(_ unionByName _)
+    codesOf(spark, root, m)
       .select(col("vec_id"), col("codes"), col("cid"))
       .write.partitionBy("cid").parquet(codesDir(root, g))
     Gens.commitRetrying(fs, root, maxAttempts, beforeCommit) { live =>

@@ -3,6 +3,7 @@ package graft
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** At-rest storage for the MinHash class registry — the executable
   * form of x86/x95's incremental-dedup story (reference surface:
@@ -35,7 +36,15 @@ import org.apache.spark.sql.functions._
   * (fresh generation dirs, one atomic manifest rename, a reap under a
   * two-version reader window; single writer, and a double-fired writer
   * loses loudly). RegistryStoreSpec drives an append racing an append
-  * and an append racing a compact.
+  * and an append racing a compact. The concurrent folds of a staging
+  * or a compaction run in one job group each, which a failure or a
+  * timeout cancels ([[settle]]).
+  *
+  * Reads start no schema-inference job: each passes the schema of the
+  * first generation, in manifest order, that holds a part file, read
+  * from its parquet footer ([[Footers]]), with the `band` partition
+  * column appended as the IntegerType Spark's partition inference
+  * gives it.
   *
   * At 100 TB the registry is the piece that must NOT be rescanned
   * per day: the delta's probe reads only the band partitions (1/4 of
@@ -210,11 +219,13 @@ object RegistryStore {
     * files it is folding, not whatever a concurrent append just made
     * live (a mixed snapshot would double-fold the delta on retry). */
   private def readClassesOf(spark: SparkSession, root: String,
-                            m: Manifest): DataFrame =
-    spark.read.parquet(m.classes.map(classesDir(root, _)): _*)
+                            m: Manifest): DataFrame = {
+    val dirs = m.classes.map(classesDir(root, _))
+    spark.read.schema(Footers.schemaOf(spark, dirs)).parquet(dirs: _*)
       .groupBy(col("sig"))
       .agg(sum(col("cnt")).as("cnt"), min(col("min_id")).as("min_id"),
         first(col("arr")).as("arr"))
+  }
 
   /** The band probe index (sig, band, k0..k3), resolved through the
     * live manifest: one partition-pruned scan per generation, each
@@ -228,8 +239,9 @@ object RegistryStore {
     val byGen = m.bands.toSeq
       .flatMap { case (k, gens) => gens.map(_ -> k) }
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toSeq.sortBy(_._1)
+    lazy val schema = bandDataSchema(spark, root, m).add("band", IntegerType)
     byGen.map { case (g, ks) =>
-      spark.read.parquet(bandsDir(root, g))
+      spark.read.schema(schema).parquet(bandsDir(root, g))
         .filter(col("band").isin(ks: _*))
     }.reduceOption(_ unionByName _)
       // a store written from an EMPTY classes frame has no band
@@ -243,13 +255,15 @@ object RegistryStore {
   /** Schema of the band probe index as parquet reads it back (data
     * columns, then the `band` partition column) — the zero-bands
     * fallback shape of [[readBands]]. */
-  private val emptyBandSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("sig", StringType), StructField("k0", LongType),
-      StructField("k1", LongType), StructField("k2", LongType),
-      StructField("k3", LongType), StructField("band", IntegerType)))
-  }
+  private val emptyBandSchema: StructType = StructType(Seq(
+    StructField("sig", StringType), StructField("k0", LongType),
+    StructField("k1", LongType), StructField("k2", LongType),
+    StructField("k3", LongType), StructField("band", IntegerType)))
+
+  /** Data columns of the band index (no `band`): the first band
+    * generation of `m`, in manifest order, that holds a part file. */
+  private def bandDataSchema(spark: SparkSession, root: String, m: Manifest): StructType =
+    Footers.schemaOf(spark, m.bands.toSeq.sortBy(_._1).flatMap(_._2).distinct.map(bandsDir(root, _)))
 
   /** x82's sorted-fill compaction plan over THIS store's band-index
     * file inventory (live-manifest files only) — the maintenance
@@ -343,7 +357,9 @@ object RegistryStore {
       readClassesOf(spark, root, m).write.parquet(classesDir(root, g))
       None
     }
-    // per-band fold of multi-file bands into the fresh generation
+    // per-band fold of multi-file bands into the fresh generation; the
+    // folds read files directly, so they take the data columns only
+    lazy val bandData = bandDataSchema(spark, root, m)
     val bandFolds = m.bands.toSeq.map { case (k, gens) => () =>
       spark.sparkContext.setJobDescription(s"compact fold band=$k g=$g")
       val files = gens.flatMap(gi =>
@@ -361,14 +377,14 @@ object RegistryStore {
             .compactionPlan(inv, targetBytes)
             .select(col("bin")).distinct().count().toInt
         }
-        spark.read.parquet(files.map(_.getPath.toString): _*)
+        spark.read.schema(bandData).parquet(files.map(_.getPath.toString): _*)
           .repartitionByRange(nOut, col("k0"))
           .sortWithinPartitions(col("k0"))
           .write.parquet(s"${bandsDir(root, g)}/band=$k")
         Some(k -> Seq(g))
       } else Some(k -> gens)
     }
-    val bands = settle(root, math.min(4, m.bands.size + 1))(
+    val bands = settle(spark, root, math.min(4, m.bands.size + 1))(
       classesFold +: bandFolds).flatten.toMap
     Gens.commitRetrying(fs, root, maxAttempts, beforeCommit) { live =>
       // Generations appended since our snapshot: an append commits
@@ -392,23 +408,48 @@ object RegistryStore {
     if (reap) Gens.reap(fs, root)
   }
 
-  /** Runs `folds` on a pool of `threads` and returns their results in
-    * order. Every fold settles before any failure propagates (no write
-    * may still be in flight when the exception surfaces, or it races a
-    * later compact's reap), under [[FoldTimeout]] instead of
-    * Duration.Inf; the first failure in `folds` order is rethrown. The
-    * pool is then shut down; a write still running 60 s after that
-    * (the timeout path) is not cancelled but logged with the store
-    * root, because it can race a later compact's reap. */
-  private def settle[T](root: String, threads: Int)(folds: Seq[() => T]): Seq[T] = {
+  /** Runs `folds` on a pool of `threads`, each under its own Spark job
+    * group with `interruptOnCancel`, and returns their results in
+    * order. The first failure, or `timeout` ([[FoldTimeout]] instead of
+    * Duration.Inf), cancels the groups of the folds still running or
+    * queued, so that no job of a failed settle keeps running. Every
+    * fold then settles before the failure propagates (no write may
+    * still be in flight when the exception surfaces, or it races a
+    * later compact's reap), and the first failure to occur is rethrown.
+    * The pool is then shut down; a fold still running 60 s after that
+    * is logged with the store root, because it can race a later
+    * compact's reap. */
+  private[graft] def settle[T](spark: SparkSession, root: String, threads: Int,
+      timeout: scala.concurrent.duration.Duration = FoldTimeout)(
+      folds: Seq[() => T]): Seq[T] = {
+    import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+    val sc = spark.sparkContext
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(folds.map(f =>
-          scala.concurrent.Future(f()).transform(scala.util.Success(_)))),
-        FoldTimeout).map(_.get)
-    finally {
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val tag = s"RegistryStore $root fold ${java.util.UUID.randomUUID()}"
+    val groups = folds.indices.map(i => s"$tag $i")
+    val failure = Promise[Throwable]()
+    val runs = folds.zip(groups).map { case (f, group) =>
+      Future {
+        sc.setJobGroup(group, group, interruptOnCancel = true)
+        try f() finally sc.clearJobGroup()
+      }.transform { r => r.failed.foreach(failure.trySuccess); scala.util.Success(r) }
+    }
+    val all = Future.sequence(runs)
+    def cancelUnsettled(why: String): Unit = runs.zip(groups).foreach {
+      case (run, group) => if (!run.isCompleted) sc.cancelJobGroupAndFutureJobs(group, why)
+    }
+    try {
+      try Await.ready(Future.firstCompletedOf(Seq(all, failure.future)), timeout)
+      catch { case e: java.util.concurrent.TimeoutException =>
+        cancelUnsettled(s"$tag timed out after $timeout"); throw e }
+      failure.future.value.foreach { t =>
+        cancelUnsettled(s"$tag: a sibling fold failed")
+        Await.ready(all, timeout)
+        throw t.get
+      }
+      all.value.get.get.map(_.get)
+    } finally {
       pool.shutdown()
       if (!pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS))
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -447,7 +488,7 @@ object RegistryStore {
       // submit them concurrently so the classes write (a cache
       // read + encode + IO pass) back-fills the band side's
       // sampling/shuffle tail (guide §2.6, the compact-fold move).
-      settle(root, 2)(Seq(
+      settle(spark, root, 2)(Seq(
         () => {
           spark.sparkContext.setJobDescription(s"stage classes g=$g")
           staged.write.parquet(classesDir(root, g))

@@ -31,6 +31,12 @@ import org.apache.spark.sql.types.StructType
   * a session with other parquet settings. The listing is taken before
   * the inference, so a table rewritten during it is stored under a
   * listing that no later read sees.
+  *
+  * The memo serves tables that stay put. The generation stores
+  * ([[RegistryStore]], [[AnnStore]]) read freshly written generations
+  * on every call, so they pass the schema their own footers hold
+  * ([[Footers]]) instead. [[rows]] likewise answers a table's row count
+  * from its footers, without the jobs of a `count()`.
   */
 object Tables {
   private final case class Inferred(leaves: Seq[(String, Long, Long)],
@@ -99,4 +105,9 @@ object Tables {
     normalizeTs(table(s, d, "events"), "ts")
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  /** Rows of table `name`, summed from its parquet footers: the number
+    * a `count()` of the table returns, without its job. */
+  def rows(s: SparkSession, d: String, name: String): Long =
+    Footers.rows(s, s"$d/$name.parquet")
 }

@@ -2059,7 +2059,7 @@ object Extensions {
         // ~10 ms tasks whose scheduling waves dominated on a
         // contended host; at real scale the scan is already
         // multi-split and the clamp is the core budget)
-        .repartition(graft.Knobs.codecParts(Tables.documents(s, d).count()))
+        .repartition(graft.Knobs.codecParts(Tables.rows(s, d, "documents")))
         .map { id =>
           val w = 8 + (id % 9).toInt
           val h = 8 + ((id * 3) % 9).toInt
@@ -3789,7 +3789,7 @@ object Extensions {
     (s, d) => {
       import s.implicits._
       val decoded = Tables.documents(s, d).select(col("doc_id")).as[Long]
-        .repartition(graft.Knobs.codecParts(Tables.documents(s, d).count()))
+        .repartition(graft.Knobs.codecParts(Tables.rows(s, d, "documents")))
         .map { id =>
           val n = 64 + (id % 33).toInt
           val samples = Array.tabulate(n)(i =>
@@ -7109,7 +7109,7 @@ object Extensions {
       import s.implicits._
       val hashed = Tables.documents(s, d).select(col("doc_id")).as[Long]
         .repartition(graft.Knobs.codecParts(
-          Tables.documents(s, d).count())) // row-sized codec tasks
+          Tables.rows(s, d, "documents"))) // row-sized codec tasks
         .map { id =>
           val off = ((id * 31) % 256).toInt
           val png = graft.multimodal.Media.encodePng(16, 16, (x, y) => {
@@ -7159,7 +7159,7 @@ object Extensions {
       import s.implicits._
       val hashed = Tables.documents(s, d).select(col("doc_id")).as[Long]
         .repartition(graft.Knobs.codecParts(
-          Tables.documents(s, d).count())) // row-sized codec tasks
+          Tables.rows(s, d, "documents"))) // row-sized codec tasks
         .map { id =>
           val off = ((id * 7) % 256).toInt
           val samples = Array.tabulate(128)(i =>

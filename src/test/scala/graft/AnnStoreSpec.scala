@@ -64,6 +64,36 @@ class AnnStoreSpec extends AnyFunSuite {
     v.unpersist()
   }
 
+  test("an empty append leaves a codes generation without files; the " +
+    "index stays readable and compactable") {
+    val v = quantized.persist(); v.count()
+    val root = tempRoot("empty_append")
+    AnnStore.build(v, root)
+    val want = codesKey(AnnStore.readCodes(spark, root))
+    AnnStore.append(v.filter(lit(false)), root)
+    assert(AnnStore.currentManifest(spark, root).codes.length == 2)
+    assert(AnnStore.readCodes(spark, root).count() == want.length)
+    assert(codesKey(AnnStore.readCodes(spark, root)) == want)
+    AnnStore.compact(spark, root)
+    assert(codesKey(AnnStore.readCodes(spark, root)) == want)
+    v.unpersist()
+  }
+
+  test("building readCodes and readModel starts no Spark job") {
+    val v = quantized.persist(); v.count()
+    val (hist, delta) = halves(v)
+    val root = tempRoot("nojobs")
+    AnnStore.build(hist, root)
+    AnnStore.append(delta, root)
+    val (codes, codeJobs) = TestSpark.jobsOf(AnnStore.readCodes(spark, root))
+    val (model, modelJobs) = TestSpark.jobsOf(AnnStore.readModel(spark, root))
+    assert(codeJobs == 0 && modelJobs == 0, s"readCodes $codeJobs, readModel $modelJobs jobs")
+    assert(codes.columns.toSeq == Seq("vec_id", "codes", "cid"))
+    assert(codes.count() == v.count())
+    assert(model.count() == 1L)
+    v.unpersist()
+  }
+
   test("a probe's scan partition-prunes to the probed cell in EVERY " +
     "generation") {
     val v = quantized.persist(); v.count()

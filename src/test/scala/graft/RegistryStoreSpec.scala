@@ -365,6 +365,79 @@ class RegistryStoreSpec extends AnyFunSuite {
       Seq("sig", "k0", "k1", "k2", "k3", "band"))
   }
 
+  test("an empty append keeps the registry readable and compactable") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_regstore_empty_append").toString
+    val d = docArrs.persist()
+    RegistryStore.write(graft.queries.Extensions.classesOf(d), root)
+    val want = classesKey(RegistryStore.readClasses(spark, root))
+    val bands = RegistryStore.readBands(spark, root).count()
+    RegistryStore.append(graft.queries.Extensions.classesOf(
+      d.filter(lit(false))), root)
+    assert(RegistryStore.currentManifest(spark, root).classes.length == 2)
+    assert(classesKey(RegistryStore.readClasses(spark, root)) == want)
+    assert(RegistryStore.readBands(spark, root).count() == bands)
+    RegistryStore.compact(spark, root)
+    assert(classesKey(RegistryStore.readClasses(spark, root)) == want)
+    assert(RegistryStore.readBands(spark, root).count() == bands)
+    d.unpersist()
+  }
+
+  test("building readClasses and readBands starts no Spark job") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_regstore_nojobs").toString
+    val d = docArrs.persist()
+    RegistryStore.write(graft.queries.Extensions.classesOf(
+      d.filter(col("doc_id") % 2 === 0)), root)
+    RegistryStore.append(graft.queries.Extensions.classesOf(
+      d.filter(col("doc_id") % 2 === 1)), root)
+    val (classes, classJobs) = TestSpark.jobsOf(RegistryStore.readClasses(spark, root))
+    val (bands, bandJobs) = TestSpark.jobsOf(RegistryStore.readBands(spark, root))
+    assert(classJobs == 0 && bandJobs == 0,
+      s"readClasses $classJobs, readBands $bandJobs jobs")
+    assert(classes.columns.toSeq == Seq("sig", "cnt", "min_id", "arr"))
+    assert(bands.columns.toSeq == Seq("sig", "k0", "k1", "k2", "k3", "band"))
+    assert(classesKey(classes) ==
+      classesKey(graft.queries.Extensions.classesOf(d)))
+    d.unpersist()
+  }
+
+  test("a fold blocked past its timeout is cancelled: settle throws, " +
+    "the blocked task is interrupted and no job of its group runs on") {
+    import org.apache.spark.JobExecutionStatus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val root = "settle-timeout-spec"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .exists(_.startsWith(s"RegistryStore $root fold"))) jobs.add(j.jobId)
+    }
+    sc.addSparkListener(l)
+    try {
+      intercept[java.util.concurrent.TimeoutException] {
+        RegistryStore.settle(spark, root, 2,
+          scala.concurrent.duration.FiniteDuration(3, "s"))(Seq(
+          () => 1,
+          () => { sc.parallelize(Seq(1), 1).foreach(_ => SettleLatch.block()); 2 }))
+      }
+      eventually(timeout(60.seconds), interval(200.millis)) {
+        assert(!jobs.isEmpty, "the blocked fold's job was never seen")
+        jobs.forEach { id =>
+          assert(!sc.statusTracker.getJobInfo(id).exists(
+            _.status == JobExecutionStatus.RUNNING), s"job $id still running")
+        }
+        assert(SettleLatch.interrupted, "the blocked task was not interrupted")
+      }
+    } finally {
+      SettleLatch.release()
+      sc.removeSparkListener(l)
+    }
+  }
+
   test("reap reclaims stale dot-tmp manifest files from crashed " +
     "commits, never a live writer's in-flight tmp") {
     val root = java.nio.file.Files
@@ -633,4 +706,14 @@ class RegistryStoreSpec extends AnyFunSuite {
       "the losing compactor corrupted the live store")
     d.unpersist()
   }
+}
+
+/** A latch a task blocks on until it is interrupted (or released). */
+object SettleLatch {
+  private val latch = new java.util.concurrent.CountDownLatch(1)
+  @volatile var interrupted = false
+  def block(): Unit =
+    try latch.await()
+    catch { case e: InterruptedException => interrupted = true; throw e }
+  def release(): Unit = latch.countDown()
 }

@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,36 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class TablesMemoSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private val Sentinel = "tables-memo-sentinel"
-
-  /** Spark jobs started while `body` runs, counted by a listener. A
-    * sentinel job run after `body` marks the end, because a listener
-    * gets its events in order. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val started = new LinkedBlockingQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        started.put(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      sc.setJobDescription(Sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      var n = 0
-      var d = started.poll(60, TimeUnit.SECONDS)
-      while (d != Sentinel) {
-        assert(d != null, "the sentinel job never reached the listener")
-        n += 1
-        d = started.poll(60, TimeUnit.SECONDS)
-      }
-      (out, n)
-    } finally sc.removeSparkListener(l)
-  }
+  import TestSpark.jobsOf
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
